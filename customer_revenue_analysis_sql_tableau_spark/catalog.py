@@ -15,6 +15,9 @@ nothing here collects to the driver.
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +48,30 @@ BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "par
 #: applicationId (the _VIEW_CACHE recipe, queries.py) drops plans bound
 #: to dead SparkContexts after a session restart.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+
+
+def source_fingerprint(sf_dir: str, table: str | None = None) -> str:
+    """8-hex content fingerprint of ``sf_dir`` (or of one ``table`` in
+    it): relative path, size and mtime-ns of every file under it, so an
+    in-place rewrite of any part file changes it. No data is read — at
+    100 TB this is a metadata listing, the signal a table format's
+    snapshot id provides. Persisted artifacts fold it into their
+    directory names so changed inputs never serve a stale build."""
+    root = os.path.join(sf_dir, f"{table}.parquet") if table else sf_dir
+    if os.path.isfile(root):
+        paths = [root]
+    else:
+        paths = [os.path.join(r, f) for r, _dirs, fs in os.walk(root) for f in fs]
+    parts: list[str] = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except OSError:
+            continue
+        parts.append(f"{os.path.relpath(p, root)}:{st.st_size}:{st.st_mtime_ns}")
+    return hashlib.md5(
+        (sf_dir.rstrip("/") + "\0" + "\n".join(sorted(parts))).encode()
+    ).hexdigest()[:8]
 
 
 def ensure_utc_session(spark: SparkSession) -> None:

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
+from ..session import checkpoint_layout, scoped_conf
 
 #: Fixed-point scale: SCALE units == rank 1.0 (10 decimal digits).
 SCALE = 10_000_000_000
@@ -70,49 +71,8 @@ TOP_N = 100
 #: ``spark.sql.shuffle.partitions`` cap (the conf a cluster deployment
 #: sizes) at 100 TB. Measured at sf0.1 (interleaved min-of-3,
 #: copurchase): 8 parts 1.75 s, 4 parts 2.12 s, 16 parts 2.26 s,
-#: 32 parts 3.13 s, unpartitioned r14 baseline 2.49 s.
+#: 32 parts 3.13 s, unpartitioned 2.49 s.
 _CKPT_ROWS_PER_PARTITION = 300_000
-
-
-def _checkpoint_partitioned(
-    spark: SparkSession, df: DataFrame, *keys: str
-) -> DataFrame:
-    """Eager ``localCheckpoint`` that PRESERVES hash partitioning.
-
-    ``Dataset.localCheckpoint`` captures the physical plan's output
-    partitioning into the ``LogicalRDD`` leaf — but only when the plan
-    is concrete: under AQE the plan is an ``AdaptiveSparkPlan`` whose
-    output partitioning is ``UnknownPartitioning``, so every checkpoint
-    made with AQE on loses its layout and every downstream join/agg on
-    the checkpoint's own key pays a fresh Exchange (measured: the r14
-    pagerank plans re-shuffled the checkpointed edge list once per
-    iteration — 3 extra edge-sized Exchanges per run, plus one per
-    degree recomputation). With ``keys`` the frame is materialized
-    ONCE with AQE on (the heavy build — self-join + distinct — keeps
-    runtime re-planning), its row count sizes the layout
-    (:data:`_CKPT_ROWS_PER_PARTITION`, capped at
-    ``spark.sql.shuffle.partitions`` so a cluster deployment's conf
-    still bounds it), and the cheap re-key is checkpointed with AQE
-    toggled off so ``hashpartitioning(keys, n)`` is captured;
-    iteration joins/aggs keyed the same way are then exchange-free on
-    this side (guide §2.4 — two operations keyed the same way share
-    one exchange). With no ``keys`` the frame's existing partitioning
-    is captured as-is (used for frames already co-partitioned by
-    construction, e.g. the degree aggregation over the partitioned
-    edge checkpoint).
-    """
-    if keys:
-        raw = df.localCheckpoint()
-        n_rows = raw.count()
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n = max(1, min(cap, -(-n_rows // _CKPT_ROWS_PER_PARTITION)))
-        df = raw.repartition(n, *keys)
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,19 +105,18 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``N_ITERS`` power iterations on the co-purchase graph. Every
     arithmetic step is exact integer math (module docstring), so the
     DuckDB oracle reproduces the ranks bit-for-bit."""
-    # edges checkpointed PARTITIONED on src (r15): every iteration's
+    # edges checkpointed PARTITIONED on src: every iteration's
     # edges⋈contrib join and the degree aggregation are keyed on src,
-    # so capturing hashpartitioning(src) in the checkpoint makes them
-    # exchange-free on the edge side — the r14 plan paid one edge-sized
-    # Exchange per iteration plus one per deg recomputation (guide
-    # §2.4). deg is checkpointed too (it is read by every iteration's
-    # rank update; uncheckpointed it re-aggregated the edges 4× per
-    # run) — its groupBy needs no exchange over the partitioned edges,
-    # and the checkpoint re-captures hash(src) for the update join.
-    edges = _checkpoint_partitioned(spark, _copurchase_edges(spark, sf_dir), "src")
-    deg = _checkpoint_partitioned(
-        spark, edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    # so the captured hashpartitioning(src) makes them exchange-free on
+    # the edge side (guide §2.4). deg is checkpointed too (every
+    # iteration's rank update reads it): its groupBy needs no exchange
+    # over the partitioned edges, and the AQE-off checkpoint keeps
+    # hash(src) for the update join.
+    edges = checkpoint_layout(
+        spark, _copurchase_edges(spark, sf_dir), _CKPT_ROWS_PER_PARTITION, "src"
     )
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).localCheckpoint()
     state = deg.withColumn("rank", F.lit(SCALE).cast("long"))
     # both per-iteration joins feed hash aggregates / projections —
     # no sort order is ever needed, so shuffle_hash (build = the
@@ -257,14 +216,13 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the co-purchase entry: edges checkpointed once, one
     shuffle_hash join + one aggregation per iteration, plus two
     broadcast-sized scalar frames (dangling sum, node count)."""
-    # edges checkpointed PARTITIONED on src, base on id (r15): the
+    # edges checkpointed PARTITIONED on src, base on id: the
     # contribution join keys on src and the rank-update left join on
-    # id, so capturing the hash layouts in the checkpoints leaves ONE
-    # exchange per iteration (the groupBy(dst) re-key) instead of
-    # re-shuffling edges + base every iteration (guide §2.4; see
-    # _checkpoint_partitioned for why AQE must be off at capture).
-    edges = _checkpoint_partitioned(
-        spark, _supply_return_edges(spark, sf_dir), "src"
+    # id, so the captured hash layouts leave ONE exchange per iteration
+    # (the groupBy(dst) re-key) instead of re-shuffling edges + base
+    # every iteration (guide §2.4).
+    edges = checkpoint_layout(
+        spark, _supply_return_edges(spark, sf_dir), _CKPT_ROWS_PER_PARTITION, "src"
     )
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     nodes = (
@@ -272,11 +230,12 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    base = _checkpoint_partitioned(  # node set + out-degrees, reused every iteration
+    base = checkpoint_layout(  # node set + out-degrees, reused every iteration
         spark,
         nodes.join(outdeg.withColumnRenamed("src", "id"), "id", "left").select(
             "id", F.coalesce("d", F.lit(0)).alias("d")
         ),
+        _CKPT_ROWS_PER_PARTITION,
         "id",
     )
     n_frame = base.agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -320,11 +279,11 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 3.19 s min-of-4) and removes the 2^iters re-execution
         # hazard at scale. This stays a PLAIN localCheckpoint (state's
         # own partitioning is lost, but contrib is node-sized and
-        # re-shuffled cheaply anyway): re-capturing it via the AQE-off
-        # path made iterations 2-3× slower at sf0.1 (0.27 → 0.75 s
-        # each — the un-coalesced 32-partition groupBy exchange), while
-        # the partitioned EDGES + BASE checkpoints alone already drop
-        # the per-iteration edge/base Exchanges (guide §2.4).
+        # re-shuffled cheaply anyway): capturing it with AQE off made
+        # iterations 2-3× slower at sf0.1 (0.27 → 0.75 s each — the
+        # un-coalesced 32-partition groupBy exchange), while the
+        # partitioned EDGES + BASE checkpoints alone already drop the
+        # per-iteration edge/base Exchanges (guide §2.4).
         state = state.localCheckpoint()
     return (
         state.select(

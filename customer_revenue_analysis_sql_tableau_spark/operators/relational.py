@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..functions.money import cents, money, round2_div, round2_div_sql
+from ..session import scoped_conf
 from .warehouse import sum_revenue
 
 _REV_SQL = (
@@ -437,40 +438,28 @@ def bloom_runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_bloom_filter.py asserts both plan markers are present
     under these confs and absent without them, with bit-identical
     results either way. Exact integer quantities (cents) — no float in
-    the aggregate. Confs restored after materialization."""
-    old = {k: spark.conf.get(k, None) for k in BLOOM_FILTER_CONFS}
-    try:
-        # load FIRST: load_tables re-applies the session's runtime
-        # confs (incl. the 64 MB broadcast threshold), which would
-        # silently undo the shuffle-join forcing set below — the
-        # injection requires a shuffle join (caught by the plan test)
-        t = load_tables(spark, sf_dir, names=("orders", "lineitem"))
-        for k, v in BLOOM_FILTER_CONFS.items():
-            spark.conf.set(k, v)
-        sel = (
-            t["orders"]
-            .filter(F.col("o_orderpriority") == "1-URGENT")
-            .select("o_orderkey")
+    the aggregate. The tables load before the scope opens:
+    ``load_tables`` re-applies the 64 MB broadcast threshold, which
+    ``scoped_conf`` would refuse as a change to a key it owns."""
+    t = load_tables(spark, sf_dir, names=("orders", "lineitem"))
+    sel = (
+        t["orders"]
+        .filter(F.col("o_orderpriority") == "1-URGENT")
+        .select("o_orderkey")
+    )
+    res = (
+        t["lineitem"]
+        .join(sel, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("l_returnflag")
+        .agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            F.sum(cents(F.col("l_quantity"))).alias("qty_c"),
         )
-        res = (
-            t["lineitem"]
-            .join(sel, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("l_returnflag")
-            .agg(
-                F.count(F.lit(1)).alias("n_lines"),
-                F.sum(cents(F.col("l_quantity"))).alias("qty_c"),
-            )
-            .orderBy("l_returnflag")
-        )
-        # materialize while the confs are live (the lazy plan would
-        # otherwise compile after the finally restores them)
+        .orderBy("l_returnflag")
+    )
+    # the frame plans at its first action: materialize inside the scope
+    with scoped_conf(spark, BLOOM_FILTER_CONFS):
         return res.localCheckpoint()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # --------------------------------------------------------------------------

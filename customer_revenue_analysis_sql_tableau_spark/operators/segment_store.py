@@ -93,6 +93,8 @@ VACUUM_RETAIN_LAST = 1
 #: digests cover all three so a copy that corrupted vector VALUES (not
 #: just membership) flips them.
 _POSTING_COLS = ("vec_id", "v", "cell")
+#: Column order of the vacuum passes' recorded content digests.
+_VAC_DIGEST_COLS = ("vec_id", "cell", "v")
 
 #: Writer-contract schema of every postings segment (the ingest
 #: protocol writes exactly this; ``cell`` is the partition column).
@@ -294,13 +296,6 @@ def _vac_reader(spark: SparkSession, vd: str, segments: list[str]) -> DataFrame:
     )
 
 
-def _vac_digest(df: DataFrame):
-    """(count, order-insensitive content digest) of a reader view —
-    xxhash64 hashes the vector array by value, so any row or element
-    change flips it."""
-    return content_digest(df, ("vec_id", "cell", "v"))
-
-
 def _run_retention(
     root: str, chain: dict[int, list[str]], staged: set[str], retain: int
 ) -> tuple[list[str], list[int], list[int]]:
@@ -375,8 +370,8 @@ def sim_persisted_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # snapshot the head answer BEFORE any delete — the digest the
         # post-delete reader must reproduce bit-for-bit
-        n_pre, dig_pre = _vac_digest(
-            _vac_reader(spark, vd, _VAC_CHAIN[head_v])
+        n_pre, dig_pre = content_digest(
+            _vac_reader(spark, vd, _VAC_CHAIN[head_v]), _VAC_DIGEST_COLS
         )
         atomic_write_json(f"{root}/digest_pre", {"n": n_pre, "dig": dig_pre})
 
@@ -394,7 +389,9 @@ def sim_persisted_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = read_json(f"{root}/digest_pre")
     remaining_manifests = sorted(json_manifest_chain(root))
     head_segs = read_json(f"{root}/manifest_v{head_v}")["segments"]
-    n_post, dig_post = _vac_digest(_vac_reader(spark, vd, head_segs))
+    n_post, dig_post = content_digest(
+        _vac_reader(spark, vd, head_segs), _VAC_DIGEST_COLS
+    )
     remaining_segs = sorted(
         f_
         for f_ in os.listdir(root)
@@ -515,7 +512,9 @@ def sim_persisted_vacuum_window(
         # the head) reproduces its answer bit-for-bit afterwards
         pre = {}
         for v in sorted(_VAC2_CHAIN)[-_VAC2_RETAIN:]:
-            n, dig = _vac_digest(_vac_reader(spark, vd, _VAC2_CHAIN[v]))
+            n, dig = content_digest(
+                _vac_reader(spark, vd, _VAC2_CHAIN[v]), _VAC_DIGEST_COLS
+            )
             pre[str(v)] = {"n": n, "dig": dig}
         atomic_write_json(f"{root}/digest_pre", pre)
 
@@ -531,11 +530,15 @@ def sim_persisted_vacuum_window(
     pre = read_json(f"{root}/digest_pre")
     remaining_manifests = sorted(json_manifest_chain(root))
     head_segs = read_json(f"{root}/manifest_v{head_v}")["segments"]
-    n_post, dig_post = _vac_digest(_vac_reader(spark, vd, head_segs))
+    n_post, dig_post = content_digest(
+        _vac_reader(spark, vd, head_segs), _VAC_DIGEST_COLS
+    )
     head_pre = pre[str(head_v)]
     # the intermediate retained version, re-read from disk post-delete
     try:
-        n_mid, dig_mid = _vac_digest(read_vacuum2_asof(spark, sf_dir, mid_v))
+        n_mid, dig_mid = content_digest(
+            read_vacuum2_asof(spark, sf_dir, mid_v), _VAC_DIGEST_COLS
+        )
         mid_pre = pre[str(mid_v)]
         mid_ok = n_mid == mid_pre["n"] and dig_mid == mid_pre["dig"]
     except Exception:  # noqa: BLE001 - a failed retained read is a FAIL

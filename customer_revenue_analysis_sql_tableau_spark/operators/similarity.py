@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..catalog import load_tables
+from ..catalog import load_tables, source_fingerprint
 from .dedup import _cos
 
 #: Registered-query parameters (pinned for determinism).
@@ -906,38 +906,9 @@ def sim_delete_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _embeddings_fingerprint(sf_dir: str) -> str:
-    """size+mtime fingerprint of the embeddings source (file or dir)."""
-    import hashlib
-    import os
-
-    root = os.path.join(sf_dir, "embeddings.parquet")
-    parts: list[str] = []
-    if os.path.isfile(root):
-        st = os.stat(root)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    else:
-        for r, _dirs, files in os.walk(root):
-            for f in files:
-                p = os.path.join(r, f)
-                try:
-                    st = os.stat(p)
-                except OSError:
-                    continue
-                # key by relative path, not bare filename — identically
-                # named part files in different subdirectories of a
-                # partitioned dataset must not alias (matches
-                # warehouse._sf_data_fingerprint)
-                rel = os.path.relpath(p, root)
-                parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5(
-        (sf_dir.rstrip("/") + "\0" + "\n".join(sorted(parts))).encode()
-    ).hexdigest()[:8]
-
-
 def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/ivf_index_{_embeddings_fingerprint(sf_dir)}"
+    return f"{warehouse}/ivf_index_{source_fingerprint(sf_dir, 'embeddings')}"
 
 
 def sim_ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1624,12 +1595,12 @@ def _merged_reader_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_index_dir(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/pq_index_{_embeddings_fingerprint(sf_dir)}"
+    return f"{warehouse}/pq_index_{source_fingerprint(sf_dir, 'embeddings')}"
 
 
 def _ivfpq_index_dir(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/ivfpq_index_{_embeddings_fingerprint(sf_dir)}"
+    return f"{warehouse}/ivfpq_index_{source_fingerprint(sf_dir, 'embeddings')}"
 
 
 def _write_codebooks(spark: SparkSession, books: np.ndarray, path: str) -> None:

@@ -27,8 +27,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, source_fingerprint
 from ..functions.money import round2_div, round2_div_sql
+from ..session import checkpoint_layout
 
 #: Tokenization: lowercase, trim, split on whitespace runs. Shared by all
 #: text/dedup operators; the oracle uses the regexp-equivalent.
@@ -588,35 +589,6 @@ BPE_S2 = chr(31)  # token end sentinel (US)
 BPE_WORDS_PER_PARTITION = 262_144
 
 
-def _bpe_checkpoint_words(spark: SparkSession, wf: DataFrame) -> DataFrame:
-    """Materialize the word-type table once, then (when it is small)
-    re-checkpoint it coalesced to a row-count-derived partition count.
-    The re-checkpoint is made with AQE toggled off so the physical
-    ``SinglePartition`` layout is captured in the LogicalRDD leaf
-    (under AQE every checkpoint reports ``UnknownPartitioning`` — the
-    r15 pagerank lesson); per-round pair-count groupBys over a
-    SinglePartition scan then plan WITHOUT an Exchange."""
-    raw = wf.localCheckpoint()
-    n_rows = raw.count()
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(1, min(cap, -(-n_rows // BPE_WORDS_PER_PARTITION)))
-    if n > 1:
-        # vocabulary-scale: keep the distributed two-stage aggregation
-        # (coalescing to n>1 captures only UnknownPartitioning(n) —
-        # no planner benefit, so skip the extra materialization)
-        return raw
-    # n == 1: even when AQE already left one partition, the plain
-    # checkpoint reports UnknownPartitioning(1), which satisfies no
-    # ClusteredDistribution — re-checkpoint AQE-off so the physical
-    # SinglePartition is captured and the Exchange is elided
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return raw.coalesce(1).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
 def _bpe_word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, cnt, tokstr) over the corpus: lowercased [a-z]+ word
     types with frequencies, each wrapped as per-character sentinel
@@ -709,7 +681,9 @@ def _bpe_fit(
     """Run the training loop; return (merge table, final word-type
     frame with fully-merged ``tokstr``). Shared by the train entry and
     the corpus tokenizer (:func:`text_bpe_tokenize`)."""
-    wf = _bpe_checkpoint_words(spark, _bpe_word_freqs(spark, sf_dir))
+    wf = checkpoint_layout(
+        spark, _bpe_word_freqs(spark, sf_dir), BPE_WORDS_PER_PARTITION
+    )
     merges: list[tuple[int, str, str, int]] = []
     cur = wf
     for rank in range(1, BPE_MERGES + 1):
@@ -807,7 +781,9 @@ def _bpe_fit_batched(
     pairs (a fully merged word-type table), instead of raising; the
     checkpoint cadence generalizes the measured (2, 4) rule to every
     other round so recomputation depth stays bounded at any depth."""
-    wf = _bpe_checkpoint_words(spark, _bpe_word_freqs(spark, sf_dir))
+    wf = checkpoint_layout(
+        spark, _bpe_word_freqs(spark, sf_dir), BPE_WORDS_PER_PARTITION
+    )
     merges: list[tuple[int, int, str, str, int]] = []  # (rank, round, l, r, c)
     cur = wf
     rank = 0
@@ -951,37 +927,9 @@ BPE_DEEP_CAND = 128
 BPE_DEEP_MAX_ROUNDS = 48
 
 
-def _documents_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint (size + mtime per file, keyed by relative
-    path) of the documents table — names the persisted vocab dir so a
-    changed corpus can never serve a stale vocabulary (mirrors
-    similarity._embeddings_fingerprint)."""
-    import hashlib
-    import os
-
-    root = os.path.join(sf_dir, "documents.parquet")
-    parts: list[str] = []
-    if os.path.isfile(root):
-        st = os.stat(root)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    else:
-        for r, _dirs, files in os.walk(root):
-            for f in files:
-                p = os.path.join(r, f)
-                try:
-                    st = os.stat(p)
-                except OSError:
-                    continue
-                rel = os.path.relpath(p, root)
-                parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5(
-        (sf_dir.rstrip("/") + "\0" + "\n".join(sorted(parts))).encode()
-    ).hexdigest()[:8]
-
-
 def _bpe_vocab_dir(spark: SparkSession, sf_dir: str, tier: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/bpe_vocab_{tier}_{_documents_fingerprint(sf_dir)}"
+    return f"{warehouse}/bpe_vocab_{tier}_{source_fingerprint(sf_dir, 'documents')}"
 
 
 def _ensure_bpe_vocab(spark: SparkSession, sf_dir: str, tier: str) -> str:

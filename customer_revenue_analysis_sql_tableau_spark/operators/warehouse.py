@@ -34,8 +34,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, source_fingerprint
 from ..functions.money import cents, money, round2_div, round2_div_sql
+from ..session import scoped_conf
 
 #: Days until a line counts as "late" (twin of film.rental_duration).
 LATE_AFTER_DAYS = 7
@@ -287,28 +288,6 @@ def prepare_bucketed_facts(
         save_bucketed(df, name, key, buckets)
 
 
-def _sf_data_fingerprint(sf_dir: str) -> str:
-    """Cheap content fingerprint of an sf_dir: sorted relative paths +
-    sizes + mtimes of every file under it. No data is read — at 100 TB
-    this is a metadata listing, the same signal a table format's
-    snapshot id provides. Folded into analyzed-catalog table names so
-    in-place fixture regeneration invalidates the cached stats copy."""
-    import os
-
-    parts: list[str] = []
-    for root, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            p = os.path.join(root, f)
-            try:
-                st = os.stat(p)
-            except OSError:
-                continue
-            parts.append(
-                f"{os.path.relpath(p, sf_dir)}:{st.st_size}:{st.st_mtime_ns}"
-            )
-    return "\n".join(sorted(parts))
-
-
 def prepare_analyzed_catalog(
     spark: SparkSession,
     sf_dir: str,
@@ -325,23 +304,17 @@ def prepare_analyzed_catalog(
     ``ANALYZE TABLE ... COMPUTE STATISTICS FOR ALL COLUMNS`` — the
     one-time statistics pass that lets the cost-based optimizer
     (``spark.sql.cbo.enabled``) pick join orders and build sides from
-    measured row counts and NDVs instead of file-size heuristics
-    (r8 Next #6; SCALE.md listed "no ANALYZE stats" as a known limit).
+    measured row counts and NDVs instead of file-size heuristics.
     Returns {table: catalog_name}. Idempotent per (metastore,
-    sf_dir-CONTENTS): the catalog name folds in a fingerprint of the
-    source parquet files (relative path + size + mtime-ns), so
-    regenerating fixtures in place gets a fresh ingest + fresh ANALYZE
-    instead of silently reusing a stale saveAsTable copy (r9 ADVICE:
-    the path-only key contradicted the "refreshes when the data
-    changes" claim). Existing analyzed tables for the SAME contents
-    are reused — ANALYZE re-runs only when the data changed."""
-    import hashlib
-
+    sf_dir-CONTENTS): the catalog name folds in
+    :func:`..catalog.source_fingerprint`, so regenerating fixtures in
+    place gets a fresh ingest + fresh ANALYZE instead of silently
+    reusing a stale saveAsTable copy. Existing analyzed tables for the
+    SAME contents are reused — ANALYZE re-runs only when the data
+    changed."""
     from ..streaming.statefs import delete_dir
 
-    h = hashlib.md5(
-        (sf_dir.rstrip("/") + "\0" + _sf_data_fingerprint(sf_dir)).encode()
-    ).hexdigest()[:8]
+    h = source_fingerprint(sf_dir)
     t = load_tables(spark, sf_dir, names=tables, register=False)
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     out: dict[str, str] = {}
@@ -355,6 +328,14 @@ def prepare_analyzed_catalog(
         t[name].write.saveAsTable(cat)
         spark.sql(f"ANALYZE TABLE {cat} COMPUTE STATISTICS FOR ALL COLUMNS")
     return out
+
+
+#: Cost-based optimizer with join reordering, held for the CBO-planned
+#: entries while their frames materialize.
+CBO_CONFS = {
+    "spark.sql.cbo.enabled": "true",
+    "spark.sql.cbo.joinReorder.enabled": "true",
+}
 
 
 #: Shared-dialect SQL core for the CBO-planned entry: identical text
@@ -378,34 +359,26 @@ CBO_REVENUE_SQL = """
 def cbo_stats_revenue_by_customer(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The CBO path as a REGISTRY entry (r8 Next #6 follow-through):
-    the unhinted 6-table join-aggregate, planned by the cost-based
-    optimizer against ``ANALYZE``d catalog tables — join order and
-    build sides chosen from measured row counts/NDVs, no hints, no
-    hand-frozen order (``tests/test_cbo.py`` freezes what the
-    optimizer picks). The frame is materialized (localCheckpoint)
-    while the CBO confs are on, then the session confs are restored so
-    no other entry's plan is affected; the driver hash therefore
-    covers rows produced by the genuinely CBO-planned execution.
-    Money is DECIMAL-exact and cast once, the same text the DuckDB
-    oracle runs against the raw parquet views."""
+    """The CBO path as a REGISTRY entry: the unhinted 6-table
+    join-aggregate, planned by the cost-based optimizer against
+    ``ANALYZE``d catalog tables — join order and build sides chosen
+    from measured row counts/NDVs, no hints, no hand-frozen order
+    (``tests/test_cbo.py`` freezes what the optimizer picks). The frame
+    is materialized (localCheckpoint) inside ``scoped_conf(CBO_CONFS)``,
+    so the driver hash covers rows from the CBO-planned execution and
+    no other entry's plan sees the confs. Money is DECIMAL-exact and
+    cast once, the same text the DuckDB oracle runs against the raw
+    parquet views."""
     names = prepare_analyzed_catalog(spark, sf_dir)
-    confs = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    old = {k: spark.conf.get(k) for k in confs}
-    for k in confs:
-        spark.conf.set(k, "true")
-    try:
+    with scoped_conf(spark, CBO_CONFS):
         return spark.sql(CBO_REVENUE_SQL.format(**names)).localCheckpoint()
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 def customer_value_summary_analyzed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """:func:`customer_value_summary` planned BY THE COST-BASED
-    OPTIMIZER (r9 VERDICT Next #7): the same 13-column fill, but the
+    OPTIMIZER: the same 13-column fill, but the
     inputs are the ``ANALYZE``d catalog tables from
     :func:`prepare_analyzed_catalog` and the plan carries NO hints —
     no broadcast() on part/nation/region, no shuffle_hash on the geo
@@ -415,14 +388,10 @@ def customer_value_summary_analyzed(
     exist precisely to make hand-hints redundant); the catalog build +
     ANALYZE is ingest cost and runs untimed (bench.py preps it like
     the bucketed layout). Same output, same oracle as the view; the
-    frame is materialized while the CBO confs are on, then the session
-    confs are restored so no other entry's plan is affected."""
+    frame is materialized inside ``scoped_conf(CBO_CONFS)``, so no other
+    entry's plan sees the confs."""
     names = prepare_analyzed_catalog(spark, sf_dir)
-    confs = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    old = {k: spark.conf.get(k) for k in confs}
-    for k in confs:
-        spark.conf.set(k, "true")
-    try:
+    with scoped_conf(spark, CBO_CONFS):
         t = {name: spark.table(cat) for name, cat in names.items()}
         partial = partial_aggregate(
             t["orders"], t["lineitem"], t["part"], hints=False
@@ -430,9 +399,6 @@ def customer_value_summary_analyzed(
         return finalize_summary(
             partial, t["customer"], t["nation"], t["region"], hints=False
         ).localCheckpoint()
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 def customer_value_summary_bucketed(

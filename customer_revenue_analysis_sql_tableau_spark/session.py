@@ -7,13 +7,21 @@ Session defaults encode the 100 TB posture from SURVEY.md §7.4: AQE on
 DATETIMEs and driver testdata timestamps are timezone-naive), generous
 broadcast threshold (every dimension table is far below it at any SF —
 at 100 TB the dims are still ~MBs while facts are TBs).
+
+This module is the only code that writes the session conf:
+:func:`apply_runtime_confs` pins the engine defaults, and a query path
+that needs a different value for the length of one call takes it
+through :func:`scoped_conf`.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Runtime-settable confs, safe to (re)apply to an externally-provided
 #: session (the driver owns the session for `__spark_entry__` calls).
@@ -104,3 +112,87 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return apply_runtime_confs(spark)
+
+
+#: Conf keys held by a live :func:`scoped_conf` (one owner per key).
+_OWNED: set[str] = set()
+_OWNED_LOCK = threading.Lock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body of a ``with`` block.
+
+    - Exact restore: a key unset before the scope is unset after it; a
+      set key gets its old value back — also when the body raises.
+    - Single owner: entering a scope on a key another live scope holds
+      raises, and so does a body that changed an owned key (e.g. a
+      ``load_tables`` call re-applying :data:`RUNTIME_CONFS`). The
+      latter check is skipped when the body raised, so the body's own
+      exception is never masked.
+
+    Lazy frames plan when an action runs: materialize inside the scope
+    whatever must be planned under ``confs``.
+    """
+    with _OWNED_LOCK:
+        clash = _OWNED.intersection(confs)
+        if clash:
+            raise RuntimeError(
+                f"session conf {sorted(clash)} is already owned by a live scoped_conf"
+            )
+        _OWNED.update(confs)
+    try:
+        old = {k: spark.conf.get(k, None) for k in confs}
+        changed: list[str] = []
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+            changed = [k for k, v in confs.items() if spark.conf.get(k, None) != v]
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        if changed:
+            raise RuntimeError(
+                f"session conf {sorted(changed)} was changed inside the "
+                "scoped_conf that owns it"
+            )
+    finally:
+        with _OWNED_LOCK:
+            _OWNED.difference_update(confs)
+
+
+def checkpoint_layout(
+    spark: SparkSession, df: DataFrame, rows_per_partition: int, *keys: str
+) -> DataFrame:
+    """Eager ``localCheckpoint`` whose leaf keeps a planner-usable layout.
+
+    A checkpoint made under AQE reports ``UnknownPartitioning``, so every
+    downstream join or aggregation on the checkpoint's key pays a fresh
+    Exchange. The frame is therefore checkpointed once with AQE on (the
+    heavy build keeps runtime re-planning), its row count sizes the
+    layout at ``rows_per_partition`` rows per partition (capped at
+    ``spark.sql.shuffle.partitions``, the conf a cluster sizes), and the
+    cheap re-layout is checkpointed again with AQE off:
+
+    - with ``keys``: ``hashpartitioning(keys, n)`` is captured, so joins
+      and aggregations keyed the same way are exchange-free on this side;
+    - without ``keys``: a frame that fits one partition is captured as
+      ``SinglePartition`` (which satisfies any grouping distribution); a
+      larger one is returned as first checkpointed, since
+      ``UnknownPartitioning(n)`` gives the planner nothing.
+    """
+    raw = df.localCheckpoint()
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = max(1, min(cap, -(-raw.count() // rows_per_partition)))
+    if keys:
+        relaid = raw.repartition(n, *keys)
+    elif n == 1:
+        relaid = raw.coalesce(1)
+    else:
+        return raw
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        return relaid.localCheckpoint()

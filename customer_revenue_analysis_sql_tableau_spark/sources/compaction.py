@@ -39,7 +39,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, source_fingerprint
+from ..lake_core import content_digest
 
 #: Production deployments target 128-512 MiB; test fixtures are ~100
 #: KiB-1 MiB, so the registered entry packs toward 256 KiB to get a
@@ -90,16 +91,6 @@ def compact_dataset(
     return n
 
 
-def _stage_fingerprint(sf_dir: str) -> str:
-    import hashlib
-
-    root = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(root)
-    return hashlib.md5(
-        f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
-
-
 def parquet_compact_small_files(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -109,7 +100,7 @@ def parquet_compact_small_files(
     per-row ``xxhash64`` — any lost, duplicated, or altered row flips
     it), file-count reduction, and target adherence."""
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    staged = f"{warehouse}/compact_stage_{_stage_fingerprint(sf_dir)}"
+    staged = f"{warehouse}/compact_stage_{source_fingerprint(sf_dir)}"
     compacted = f"{staged}_packed"
     # reuse gate is the _SUCCESS COMPLETION marker (committer-written
     # last), not mere readability — a torn staging write that committed
@@ -123,24 +114,17 @@ def parquet_compact_small_files(
 
     n_target = compact_dataset(spark, staged, compacted)
 
-    def digest(path: str):
-        df = spark.read.parquet(path)
-        return df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(
-                "bit_xor(xxhash64(doc_id, text, lang, source, n_chars))"
-            ).alias("dig"),
-        ).collect()[0]
-
-    before, after = digest(staged), digest(compacted)
+    cols = ("doc_id", "text", "lang", "source", "n_chars")
+    n_before, dig_before = content_digest(spark.read.parquet(staged), cols)
+    n_after, dig_after = content_digest(spark.read.parquet(compacted), cols)
     files_before = _parquet_file_count(staged)
     files_after = _parquet_file_count(compacted)
     return spark.createDataFrame(
         [
             (
-                int(after["n"]),
-                bool(before["n"] == after["n"]),
-                bool(before["dig"] == after["dig"]),
+                n_after,
+                n_before == n_after,
+                dig_before == dig_after,
                 bool(files_after < files_before),
                 bool(files_after == n_target),
             )
@@ -266,7 +250,7 @@ def parquet_compact_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .parquet import MONTH_COL, write_month_partitioned
 
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    staged = f"{warehouse}/compact_part_{_stage_fingerprint(sf_dir)}"
+    staged = f"{warehouse}/compact_part_{source_fingerprint(sf_dir)}"
     pre_dir = f"{staged}_pre"
     root = staged.removeprefix("file:")
     marker = os.path.join(root, "_compacted")

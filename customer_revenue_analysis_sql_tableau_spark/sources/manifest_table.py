@@ -62,7 +62,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, source_fingerprint
 from ..lake_core import (
     atomic_write_json,
     content_digest,
@@ -74,7 +74,6 @@ from .compaction import (
     PART_COMPACT_CUTOFF,
     PART_STAGE_FILES,
     TARGET_FILE_BYTES,
-    _stage_fingerprint,
 )
 from .parquet import MONTH_COL, write_month_partitioned
 
@@ -558,7 +557,7 @@ def read_manifested_incremental(
 
 def _atomic_root(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/compact_manatomic_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/compact_manatomic_{source_fingerprint(sf_dir)}"
 
 
 def parquet_compact_manifest_atomic(
@@ -689,7 +688,7 @@ APPEND_FROM = "2001-01"
 
 def _incr_root(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_incr_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_incr_{source_fingerprint(sf_dir)}"
 
 
 def parquet_manifest_incremental_read(
@@ -753,7 +752,7 @@ STREAM_APPEND_BATCHES = 3
 
 def _stream_append_root(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_stream_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_stream_{source_fingerprint(sf_dir)}"
 
 
 def publish_stream_append_batch(
@@ -942,7 +941,7 @@ STREAM_MERGE_BUMP = 250.0
 
 def _stream_merge_root(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_smerge_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_smerge_{source_fingerprint(sf_dir)}"
 
 
 def publish_stream_merge_batch(
@@ -1116,7 +1115,7 @@ _SCHEMA_V2 = (
 
 def _schev_root(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_schev_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_schev_{source_fingerprint(sf_dir)}"
 
 
 def parquet_manifest_schema_evolution(
@@ -1214,7 +1213,7 @@ DELETE_ROW_MOD, DELETE_ROW_REM = 7, 3
 
 def _delete_root(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_del_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_del_{source_fingerprint(sf_dir)}"
 
 
 def parquet_manifest_delete_where(
@@ -1353,7 +1352,7 @@ MERGE_INSERT_OFFSET = 10_000_000
 
 def _merge_root(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_merge_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_merge_{source_fingerprint(sf_dir)}"
 
 
 def parquet_manifest_merge_upsert(
@@ -1557,7 +1556,7 @@ def count_eligible_files(
 
 def _zorder_root(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_zorder_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_zorder_{source_fingerprint(sf_dir)}"
 
 
 # ---------------------------------------------------------------------------
@@ -2030,7 +2029,7 @@ TXN_INSERT_OFFSET = 20_000_000
 
 def _txn_root(spark: SparkSession, sf_dir: str) -> str:
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_txn_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_txn_{source_fingerprint(sf_dir)}"
 
 
 def _land_coalesced(

@@ -51,6 +51,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import source_fingerprint
 from .parquet import MONTH_COL
 from . import manifest_table as mt
 
@@ -68,10 +69,8 @@ TWOW_B_OFFSET = 50_000_000
 
 
 def _twow_root(spark: SparkSession, sf_dir: str) -> str:
-    from .compaction import _stage_fingerprint
-
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_twow_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_twow_{source_fingerprint(sf_dir)}"
 
 
 def _already_published(root: str, writer: str, batch_id: int) -> bool:

@@ -42,6 +42,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import source_fingerprint
 from ..lake_core import exclusive_write_json
 from .parquet import MONTH_COL
 from . import manifest_table as mt
@@ -582,10 +583,8 @@ API_DEL_MOD, API_DEL_REM = 13, 6
 
 
 def _api_root(spark: SparkSession, sf_dir: str) -> str:
-    from .compaction import _stage_fingerprint
-
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_api_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_api_{source_fingerprint(sf_dir)}"
 
 
 def parquet_manifest_history(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -59,6 +59,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import source_fingerprint
 from .parquet import MONTH_COL
 from . import manifest_table as mt
 from .table_api import ManifestTable
@@ -417,10 +418,8 @@ def execute_table_sql(
 
 
 def _sql_root(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    from .compaction import _stage_fingerprint
-
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return f"{warehouse}/manifest_sql{tag}_{_stage_fingerprint(sf_dir)}"
+    return f"{warehouse}/manifest_sql{tag}_{source_fingerprint(sf_dir)}"
 
 
 def manifest_sql_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,6 +23,7 @@ from ..catalog import load_tables
 from ..operators.decontamination import DECON_K, DECON_T, EVAL_MOD, _kgrams_sql
 from ..operators.pipeline import QUALITY_T
 from ..operators.text import QUALITY_SQL
+from ..session import scoped_conf
 from .dedup_ingest import run_streaming_ingest_pipeline, seed_eval_grams
 from .windows import (
     ORACLES as _WINDOW_ORACLES,
@@ -293,17 +294,16 @@ def stream_crossbatch_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame
     return _drain(spark, build)
 
 
-#: The at-scale state-store posture (r10 VERDICT Next #6): RocksDB
-#: provider + changelog checkpointing — per-partition state spills to
-#: local disk instead of the executor heap, and commits ship changelogs
-#: instead of full snapshots.
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-_CHANGELOG_KEY = (
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-)
+#: The at-scale state-store posture: RocksDB provider + changelog
+#: checkpointing — per-partition state spills to local disk instead of
+#: the executor heap, and commits ship changelogs instead of full
+#: snapshots.
+_ROCKSDB_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
 
 
 def stream_crossbatch_dedup_rocksdb_drain(
@@ -319,20 +319,10 @@ def stream_crossbatch_dedup_rocksdb_drain(
     driver hash now certifies that the probed watermark/expiry/
     re-admission rules hold under the provider a 1000-executor cluster
     would actually run (the provider changes state CAPACITY, never
-    answers). Session confs are restored afterwards, so the entry is
-    self-contained in the shared driver session."""
-    old_provider = spark.conf.get(_PROVIDER_KEY)
-    old_changelog = spark.conf.get(_CHANGELOG_KEY, None)
-    spark.conf.set(_PROVIDER_KEY, _ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_KEY, "true")
-    try:
+    answers). The confs hold only for the drain (``scoped_conf``), so
+    the entry is self-contained in the shared driver session."""
+    with scoped_conf(spark, _ROCKSDB_CONFS):
         return stream_crossbatch_dedup_drain(spark, sf_dir)
-    finally:
-        spark.conf.set(_PROVIDER_KEY, old_provider)
-        if old_changelog is None:
-            spark.conf.unset(_CHANGELOG_KEY)
-        else:
-            spark.conf.set(_CHANGELOG_KEY, old_changelog)
 
 
 def stream_late_session_drain(spark: SparkSession, sf_dir: str) -> DataFrame:

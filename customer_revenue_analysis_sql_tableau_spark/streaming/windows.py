@@ -19,11 +19,12 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..functions.money import money
+from ..session import scoped_conf
 
 #: Window geometry (pinned for the registered queries).
 TUMBLE = "10 minutes"
@@ -250,6 +251,56 @@ def _read_events_stream(
     return raw
 
 
+#: No-data micro-batches pinned OFF for the late-data drains: a trailing
+#: empty batch would advance the watermark past delivery 1's bound and
+#: emit extra windows, making the sink depend on a version/timing-
+#: sensitive scheduler choice instead of the data batches the oracles
+#: model.
+_NO_EMPTY_BATCHES = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+
+
+def _drain_late_windows(
+    spark: SparkSession,
+    source_dir: str,
+    checkpoint_dir: str,
+    sink: str,
+    window: Column,
+    key: str,
+    lead: list | None = None,
+) -> DataFrame:
+    """Count + exact value sum per (``window``, ``key``) in APPEND mode,
+    one micro-batch per source file, drained (availableNow) into the
+    memory table ``sink``. The output leads with ``lead`` (default:
+    ``window_start, window_end, key``). Returns the sink."""
+    if lead is None:
+        lead = [
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            key,
+        ]
+    with scoped_conf(spark, _NO_EMPTY_BATCHES):
+        raw = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
+        stream = (
+            raw.withWatermark("ts", WATERMARK)
+            .groupBy(window.alias("w"), key)
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum(money("value")), 2).cast("double").alias("total_value"),
+            )
+            .select(*lead, "n_events", "total_value")
+        )
+        query = (
+            stream.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("append")
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+    return spark.table(sink)
+
+
 def run_late_data_stream(
     spark: SparkSession, source_dir: str, checkpoint_dir: str
 ) -> DataFrame:
@@ -277,18 +328,12 @@ def run_late_data_stream(
     oracle computes the same set from the raw table and the watermark
     arithmetic.
 
-    No-data micro-batches are pinned OFF for this run (save/restore): a
-    trailing empty batch would advance the watermark past delivery 1's
-    bound and emit extra windows, making the sink depend on a
-    version/timing-sensitive scheduler choice instead of the three data
-    batches the oracle models. Returns the append sink contents."""
-    nodata_conf = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(nodata_conf, "true")
-    spark.conf.set(nodata_conf, "false")
-    try:
-        return _run_late_data_stream(spark, source_dir, checkpoint_dir)
-    finally:
-        spark.conf.set(nodata_conf, prev)
+    No-data micro-batches are off for the run (:data:`_NO_EMPTY_BATCHES`).
+    Returns the append sink contents."""
+    return _drain_late_windows(
+        spark, source_dir, checkpoint_dir, "late_data_sink",
+        F.window("ts", TUMBLE), "event_type",
+    )
 
 
 def run_late_session_stream(
@@ -311,75 +356,15 @@ def run_late_session_stream(
     The deterministic model the oracle computes: sessionize deliveries
     1-2 and keep sessions whose end <= wm, where wm =
     max(delivery-1 ts) - delay."""
-    nodata_conf = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(nodata_conf, "true")
-    spark.conf.set(nodata_conf, "false")
-    try:
-        return _run_late_session_stream(spark, source_dir, checkpoint_dir)
-    finally:
-        spark.conf.set(nodata_conf, prev)
-
-
-def _run_late_session_stream(
-    spark: SparkSession, source_dir: str, checkpoint_dir: str
-) -> DataFrame:
-    raw = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-    stream = (
-        raw.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(money("value")), 2).cast("double").alias("total_value"),
-        )
-        .select(
+    return _drain_late_windows(
+        spark, source_dir, checkpoint_dir, "late_session_sink",
+        F.session_window("ts", SESSION_GAP), "user_id",
+        [
             "user_id",
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
+        ],
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("late_session_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("late_session_sink")
-
-
-def _run_late_data_stream(
-    spark: SparkSession, source_dir: str, checkpoint_dir: str
-) -> DataFrame:
-    raw = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-    stream = (
-        raw.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", TUMBLE).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(money("value")), 2).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("late_data_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("late_data_sink")
 
 
 def run_late_sliding_stream(
@@ -397,43 +382,10 @@ def run_late_sliding_stream(
     never emitted by the availableNow drain, so it cannot reach the
     sink either way. No-data batches pinned off (same reasoning as the
     tumbling drain)."""
-    nodata_conf = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(nodata_conf, "true")
-    spark.conf.set(nodata_conf, "false")
-    try:
-        raw = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-        stream = (
-            raw.withWatermark("ts", WATERMARK)
-            .groupBy(
-                F.window("ts", SLIDE_DURATION, SLIDE_STEP).alias("w"),
-                "event_type",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum(money("value")), 2)
-                .cast("double")
-                .alias("total_value"),
-            )
-            .select(
-                F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "event_type",
-                "n_events",
-                "total_value",
-            )
-        )
-        query = (
-            stream.writeStream.format("memory")
-            .queryName("late_sliding_sink")
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        return spark.table("late_sliding_sink")
-    finally:
-        spark.conf.set(nodata_conf, prev)
+    return _drain_late_windows(
+        spark, source_dir, checkpoint_dir, "late_sliding_sink",
+        F.window("ts", SLIDE_DURATION, SLIDE_STEP), "event_type",
+    )
 
 
 def run_dedup_stream(

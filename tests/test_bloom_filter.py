@@ -7,35 +7,27 @@ from pyspark.sql import functions as F
 
 from customer_revenue_analysis_sql_tableau_spark.catalog import load_tables
 from customer_revenue_analysis_sql_tableau_spark.operators import relational as rel
+from customer_revenue_analysis_sql_tableau_spark.session import scoped_conf
 
 
 def _pruned_plan(spark, sf_dir: str) -> str:
     """The entry's join plan compiled under the bloom confs (the entry
     itself returns a localCheckpoint, which hides the original plan)."""
-    old = {k: spark.conf.get(k, None) for k in rel.BLOOM_FILTER_CONFS}
-    try:
-        # load first — load_tables re-applies the runtime confs
-        t = load_tables(spark, sf_dir, names=("orders", "lineitem"))
-        for k, v in rel.BLOOM_FILTER_CONFS.items():
-            spark.conf.set(k, v)
-        sel = (
-            t["orders"]
-            .filter(F.col("o_orderpriority") == "1-URGENT")
-            .select("o_orderkey")
-        )
-        j = (
-            t["lineitem"]
-            .join(sel, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("l_returnflag")
-            .agg(F.count(F.lit(1)).alias("n_lines"))
-        )
+    # load first — load_tables re-applies the runtime confs
+    t = load_tables(spark, sf_dir, names=("orders", "lineitem"))
+    sel = (
+        t["orders"]
+        .filter(F.col("o_orderpriority") == "1-URGENT")
+        .select("o_orderkey")
+    )
+    j = (
+        t["lineitem"]
+        .join(sel, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("l_returnflag")
+        .agg(F.count(F.lit(1)).alias("n_lines"))
+    )
+    with scoped_conf(spark, rel.BLOOM_FILTER_CONFS):
         return j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_bloom_filter_injected_under_scale_confs(spark, sf_dir):

@@ -27,22 +27,16 @@ import re
 
 import pytest
 
-SF_CBO = "/root/testdata/sf0.1"
+from customer_revenue_analysis_sql_tableau_spark.operators.warehouse import CBO_CONFS
+from customer_revenue_analysis_sql_tableau_spark.session import scoped_conf
 
-_CBO_CONFS = (
-    "spark.sql.cbo.enabled",
-    "spark.sql.cbo.joinReorder.enabled",
-)
+SF_CBO = "/root/testdata/sf0.1"
 
 
 @pytest.fixture()
 def cbo_spark(spark):
-    old = {k: spark.conf.get(k) for k in _CBO_CONFS}
-    for k in _CBO_CONFS:
-        spark.conf.set(k, "true")
-    yield spark
-    for k, v in old.items():
-        spark.conf.set(k, v)
+    with scoped_conf(spark, CBO_CONFS):
+        yield spark
 
 
 def test_cbo_statistics_drive_the_view_join_plan(cbo_spark):

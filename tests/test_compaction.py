@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import pytest
 
+from customer_revenue_analysis_sql_tableau_spark.catalog import source_fingerprint
+from customer_revenue_analysis_sql_tableau_spark.session import scoped_conf
 from customer_revenue_analysis_sql_tableau_spark.sources import compaction as cp
 
 
@@ -29,7 +31,7 @@ def test_compaction_plan_is_shuffle_free(summary, spark, sf_dir):
     the write plan (clustering rewrites are zorder.py's job and pay
     their shuffle deliberately — plain compaction must not)."""
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    staged = f"{warehouse}/compact_stage_{cp._stage_fingerprint(sf_dir)}"
+    staged = f"{warehouse}/compact_stage_{source_fingerprint(sf_dir)}"
     df = spark.read.parquet(staged).coalesce(3)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
@@ -87,7 +89,7 @@ def test_partitioned_layout_in_place(part_summary, spark, sf_dir):
     unselected keep the staged fragmentation — the pass never leaves
     its partition directory."""
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    staged = f"{warehouse}/compact_part_{cp._stage_fingerprint(sf_dir)}"
+    staged = f"{warehouse}/compact_part_{source_fingerprint(sf_dir)}"
     from customer_revenue_analysis_sql_tableau_spark.sources.parquet import (
         MONTH_COL,
     )
@@ -124,7 +126,7 @@ def test_partitioned_dpp_survives_compaction(part_summary, spark, sf_dir):
     )
 
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    staged = f"{warehouse}/compact_part_{cp._stage_fingerprint(sf_dir)}"
+    staged = f"{warehouse}/compact_part_{source_fingerprint(sf_dir)}"
     po = spark.read.parquet(staged)
     li = load_tables(spark, sf_dir, names=("lineitem",), register=False)[
         "lineitem"
@@ -139,22 +141,14 @@ def test_partitioned_dpp_survives_compaction(part_summary, spark, sf_dir):
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruningexpression" in plan
     pruned = sorted(map(tuple, j.collect()))
-    old = spark.conf.get(
-        "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-    )
-    try:
-        spark.conf.set(
-            "spark.sql.optimizer.dynamicPartitionPruning.enabled", "false"
-        )
+    with scoped_conf(
+        spark, {"spark.sql.optimizer.dynamicPartitionPruning.enabled": "false"}
+    ):
         unpruned = sorted(
             map(
                 tuple,
                 po.join(dim, MONTH_COL).groupBy(MONTH_COL).count().collect(),
             )
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.optimizer.dynamicPartitionPruning.enabled", old
         )
     assert pruned == unpruned and len(pruned) > 0
 
@@ -165,7 +159,7 @@ def test_partitioned_torn_run_replays(part_summary, spark, sf_dir):
     import os
 
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    staged = f"{warehouse}/compact_part_{cp._stage_fingerprint(sf_dir)}"
+    staged = f"{warehouse}/compact_part_{source_fingerprint(sf_dir)}"
     marker = os.path.join(staged.removeprefix("file:"), "_compacted")
     os.remove(marker)
     replay = cp.parquet_compact_partitioned(spark, sf_dir).collect()[0]

@@ -4,6 +4,7 @@ leakage-safe split that rides the same component machinery."""
 from __future__ import annotations
 
 import hashlib
+import re
 
 from customer_revenue_analysis_sql_tableau_spark.operators.graph import (
     DAMP_DEN,
@@ -15,6 +16,11 @@ from customer_revenue_analysis_sql_tableau_spark.operators.graph import (
     _copurchase_edges,
     graph_pagerank_copurchase,
 )
+
+#: Shuffle Exchanges per checkpointed plan (then the final plan) at the
+#: test session's 8 shuffle partitions.
+COPURCHASE_EXCHANGES = [6, 1, 0, 10]
+DIRECTED_EXCHANGES = [2, 1, 2, 1, 4, 5, 5]
 
 
 def _reference_pagerank(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -56,15 +62,43 @@ def test_pagerank_rank_invariants(spark, sf_dir):
     assert ranks == sorted(ranks, key=lambda t: (-t[0], t[1]))
 
 
-def test_pagerank_iterations_never_sort_merge_join(spark, sf_dir):
+def _record_checkpoint_plans(monkeypatch) -> list[str]:
+    """Record the physical plan each ``localCheckpoint`` is about to run
+    (AQE plans print their initial, pre-execution form)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    return plans
+
+
+def _exchanges(plan: str) -> int:
+    """Shuffle exchanges in one plan string (broadcasts not counted)."""
+    return len(re.findall(r"\bExchange\b", plan))
+
+
+def test_pagerank_iterations_never_sort_merge_join(spark, sf_dir, monkeypatch):
     """Every per-iteration join feeds a hash aggregate or projection —
     sort order is never needed, so the frozen strategy is
-    ShuffledHashJoin (six SMJ sorts cost ~0.6 s at sf0.1)."""
+    ShuffledHashJoin (six SMJ sorts cost ~0.6 s at sf0.1). The
+    Exchange counts freeze the hashpartitioning(src) the edge and
+    degree checkpoints capture: an edge checkpoint captured with AQE on
+    loses it and reads [6, 1, 1, 6]."""
+    plans = _record_checkpoint_plans(monkeypatch)
     df = graph_pagerank_copurchase(spark, sf_dir)
+    plans.append(df._jdf.queryExecution().executedPlan().toString())
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" in plan
+    # edge build, edge re-layout, degrees, final iteration plan
+    assert [_exchanges(p) for p in plans] == COPURCHASE_EXCHANGES, plans
 
 
 def _reference_pagerank_directed(
@@ -118,15 +152,27 @@ def test_pagerank_directed_handles_teleport_only_and_dangling(spark, sf_dir):
     assert len(ref) == len(srcs | dsts)
 
 
-def test_pagerank_directed_never_sort_merge_joins_iterations(spark, sf_dir):
+def test_pagerank_directed_never_sort_merge_joins_iterations(
+    spark, sf_dir, monkeypatch
+):
     from customer_revenue_analysis_sql_tableau_spark.operators.graph import (
         graph_pagerank_directed,
     )
 
+    plans = _record_checkpoint_plans(monkeypatch)
     df = graph_pagerank_directed(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
+    # the returned frame reads the last state checkpoint, so the
+    # iterations are checked where they run: in the checkpointed plans
+    # (edge build, edge re-layout, base build, base re-layout, one
+    # state per iteration). Edge and base checkpoints captured with
+    # AQE on read [2, 1, 2, 1, 6, 6, 6].
+    assert len(plans) == 4 + N_ITERS, plans
+    for p in plans[4:]:
+        assert "SortMergeJoin" not in p and "ShuffledHashJoin" in p, p
+    assert [_exchanges(p) for p in plans] == DIRECTED_EXCHANGES, plans
 
 
 def test_leakage_safe_split_never_straddles_components(spark, sf_dir):

@@ -43,6 +43,10 @@ from customer_revenue_analysis_sql_tableau_spark.operators.tpch_extended import 
 from customer_revenue_analysis_sql_tableau_spark.operators.warehouse import (
     customer_value_summary,
 )
+from customer_revenue_analysis_sql_tableau_spark.session import (
+    checkpoint_layout,
+    scoped_conf,
+)
 
 
 def plan(df, mode: str = "formatted") -> str:
@@ -303,13 +307,8 @@ def test_ann_windows_never_rank_full_corpus_per_query(spark, sf_dir):
     # the detector credits (r15) — so the pathological plan must be
     # reconstructed with that pushdown disabled; brute force then IS
     # the class (every query's sort group holds the full corpus).
-    wgl_conf = "spark.sql.optimizer.windowGroupLimitThreshold"
-    prev = spark.conf.get(wgl_conf)
-    spark.conf.set(wgl_conf, "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.optimizer.windowGroupLimitThreshold": "-1"}):
         assert _perkey_windows_over_bnlj(executed(sim_bruteforce_topk))
-    finally:
-        spark.conf.set(wgl_conf, prev)
     # ...and every approximate tier must be free of it, WITH the
     # planner's bound in effect (the shipping configuration)
     for fn in (sim_lsh_topk, sim_ivf_topk, sim_pq_topk, sim_ivfpq_topk):
@@ -379,19 +378,22 @@ def test_minhash_band_join_shares_one_banded_build(spark, sf_dir):
 
 
 def test_bpe_merge_round_is_single_stage_at_toy_vocab(spark, sf_dir):
-    """r16: the BPE trainers checkpoint the word-type table with a
-    captured SinglePartition layout when the vocabulary fits one
-    partition (row-count-derived, conf-capped), so every merge round's
-    pair-count aggregation plans WITHOUT an Exchange — one stage per
-    round instead of three (measured: 2 jobs/3 stages/2 exchanges →
-    1/1/0 per round, plans/r16/text_bpe_round_*.txt)."""
+    """The BPE trainers checkpoint the word-type table with a captured
+    SinglePartition layout when the vocabulary fits one partition
+    (``session.checkpoint_layout``: row-count-derived, conf-capped), so
+    every merge round's pair-count aggregation plans WITHOUT an
+    Exchange — one stage per round instead of three (measured: 2 jobs/
+    3 stages/2 exchanges → 1/1/0 per round,
+    plans/r16/text_bpe_round_*.txt)."""
     from customer_revenue_analysis_sql_tableau_spark.operators.text import (
-        _bpe_checkpoint_words,
+        BPE_WORDS_PER_PARTITION,
         _bpe_pair_counts,
         _bpe_word_freqs,
     )
 
-    wf = _bpe_checkpoint_words(spark, _bpe_word_freqs(spark, sf_dir))
+    wf = checkpoint_layout(
+        spark, _bpe_word_freqs(spark, sf_dir), BPE_WORDS_PER_PARTITION
+    )
     exec_plan = (
         _bpe_pair_counts(wf)._jdf.queryExecution().executedPlan().toString()
     )

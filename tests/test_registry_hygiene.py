@@ -309,3 +309,19 @@ def test_bench_headline_names_exist():
     missing = [n for n in bench.HEADLINE if n not in merged]
     assert not missing, f"HEADLINE names not in registry: {missing}"
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
+
+
+def test_session_conf_is_written_only_by_session_py():
+    """Query paths change session confs only through
+    ``session.scoped_conf`` (exact restore, one owner per key); a
+    hand-rolled ``conf.set``/``conf.unset`` anywhere else in the package
+    can leak state into every later query of a shared session."""
+    pkg = Path(__file__).resolve().parents[1] / "customer_revenue_analysis_sql_tableau_spark"
+    offenders = [
+        f"{p.relative_to(pkg)}:{i}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p.name != "session.py" or p.parent != pkg
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "conf.set(" in line or "conf.unset(" in line
+    ]
+    assert not offenders, f"session conf written outside session.py: {offenders}"

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import pytest
 
+from customer_revenue_analysis_sql_tableau_spark.session import scoped_conf
 from customer_revenue_analysis_sql_tableau_spark.streaming.drains import (
     stream_crossbatch_dedup_drain,
     stream_interval_right_join_drain,
@@ -40,13 +41,8 @@ _DRAINS = {
 
 
 def _rows(spark, fn, sf_dir, provider: str | None):
-    old = spark.conf.get(_PROVIDER_KEY)
-    if provider is not None:
-        spark.conf.set(_PROVIDER_KEY, provider)
-    try:
+    with scoped_conf(spark, {_PROVIDER_KEY: provider} if provider else {}):
         return sorted(map(tuple, fn(spark, sf_dir).collect()))
-    finally:
-        spark.conf.set(_PROVIDER_KEY, old)
 
 
 @pytest.mark.parametrize("name", sorted(_DRAINS))
@@ -68,15 +64,8 @@ def test_rocksdb_changelog_checkpointing_matches(spark, sf_dir):
     )
     fn = _DRAINS["crossbatch_dedup"]
     base = _rows(spark, fn, sf_dir, None)
-    old = spark.conf.get(changelog_key, None)
-    spark.conf.set(changelog_key, "true")
-    try:
+    with scoped_conf(spark, {changelog_key: "true"}):
         rocks = _rows(spark, fn, sf_dir, _ROCKSDB)
-    finally:
-        if old is None:
-            spark.conf.unset(changelog_key)
-        else:
-            spark.conf.set(changelog_key, old)
     assert rocks == base and len(base) > 0
 
 
@@ -88,10 +77,6 @@ def test_rocksdb_provider_actually_engaged(spark, sf_dir, tmp_path):
     the cheap observable is that the conf round-trips AND the drain
     still completes; a typo'd provider class fails the query hard,
     which this exercises)."""
-    old = spark.conf.get(_PROVIDER_KEY)
-    spark.conf.set(_PROVIDER_KEY, "com.example.NoSuchProvider")
-    try:
+    with scoped_conf(spark, {_PROVIDER_KEY: "com.example.NoSuchProvider"}):
         with pytest.raises(Exception, match="NoSuchProvider"):
             stream_crossbatch_dedup_drain(spark, "/root/testdata/sf0.001")
-    finally:
-        spark.conf.set(_PROVIDER_KEY, old)

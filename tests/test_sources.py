@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from customer_revenue_analysis_sql_tableau_spark.catalog import load_tables
 from customer_revenue_analysis_sql_tableau_spark.operators import sakila
+from customer_revenue_analysis_sql_tableau_spark.session import scoped_conf
 from customer_revenue_analysis_sql_tableau_spark.sources.csv import read_csv
 from customer_revenue_analysis_sql_tableau_spark.sources.parquet import (
     MONTH_COL,
@@ -79,23 +80,14 @@ def test_dynamic_partition_pruning_on_fact_dim_join(spark, sf_dir):
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "dynamicpruningexpression" in plan
         pruned = sorted(map(tuple, j.collect()))
-        old = spark.conf.get(
-            "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-        )
-        try:
-            spark.conf.set(
-                "spark.sql.optimizer.dynamicPartitionPruning.enabled",
-                "false",
-            )
+        with scoped_conf(
+            spark, {"spark.sql.optimizer.dynamicPartitionPruning.enabled": "false"}
+        ):
             unpruned = sorted(
                 map(
                     tuple,
                     po.join(dim, MONTH_COL).groupBy(MONTH_COL).count().collect(),
                 )
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.optimizer.dynamicPartitionPruning.enabled", old
             )
         assert pruned == unpruned and len(pruned) > 0
 
@@ -106,25 +98,23 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir):
     t = load_tables(spark, sf_dir, names=("orders", "lineitem"), register=False)
     with tempfile.TemporaryDirectory() as tmp:
         spark.sql(f"CREATE DATABASE IF NOT EXISTS bdb LOCATION '{tmp}/bdb'")
-        old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             save_bucketed(t["orders"], "bdb.orders_b", "o_orderkey")
             save_bucketed(t["lineitem"], "bdb.lineitem_b", "l_orderkey")
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            ob, lb = spark.table("bdb.orders_b"), spark.table("bdb.lineitem_b")
-            joined = ob.join(lb, ob.o_orderkey == lb.l_orderkey)
-            p = _plan(joined)
-            assert "SortMergeJoin" in p
-            assert "Exchange" not in p, "bucketed join still shuffles"
-            # the recorded bucket sort order must be trusted (r15 conf
-            # legacy.bucketedTableScan.outputOrdering): no per-query
-            # Sort node anywhere in this exchange-free merge join
-            import re
+            with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+                ob, lb = spark.table("bdb.orders_b"), spark.table("bdb.lineitem_b")
+                joined = ob.join(lb, ob.o_orderkey == lb.l_orderkey)
+                p = _plan(joined)
+                assert "SortMergeJoin" in p
+                assert "Exchange" not in p, "bucketed join still shuffles"
+                # the recorded bucket sort order must be trusted (conf
+                # legacy.bucketedTableScan.outputOrdering): no per-query
+                # Sort node anywhere in this exchange-free merge join
+                import re
 
-            assert not re.search(r"\(\d+\) Sort\b", p), p
-            assert joined.count() == t["lineitem"].count()
+                assert not re.search(r"\(\d+\) Sort\b", p), p
+                assert joined.count() == t["lineitem"].count()
         finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
             spark.sql("DROP DATABASE IF EXISTS bdb CASCADE")
 
 

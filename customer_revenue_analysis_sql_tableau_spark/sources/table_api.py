@@ -14,18 +14,20 @@ Delta-style ``DeltaTable`` ergonomics on top of the same machinery:
     t.change_feed(1, t.version(), keys=["o_orderkey"])
     t.vacuum()
 
-Every mutation goes through :func:`manifest_table.commit_transaction`
-(optimistic concurrency: CAS + semantic conflict check on rebase) and
-tags its commit with an ``operation`` field, which ``history()`` reads
-back — version, operation, and file-level add/remove tallies, all KB
-of driver metadata.
+Every mutation writes through the manifest table's copy-on-write
+primitives (:func:`manifest_table.stage_and_land`, ``matched_files``,
+``rewrite_files``, ``stage_upsert``), goes through
+:func:`manifest_table.commit_transaction` (optimistic concurrency: CAS
++ semantic conflict check on rebase) and tags its commit with an
+``operation`` field, which ``history()`` reads back — version,
+operation, and file-level add/remove tallies, all KB of driver
+metadata.
 
-Generic-source note: ``upsert``/``delete_where`` discover matched
-files by semi-joining the head against the BROADCAST source keys (or
-filtering on the predicate) under ``input_file_name()`` — the driver
-collects only file-count-bounded (month, file) pairs, and rewrite I/O
-is ∝ files that actually hold a match. At 100 TB a merge touching 0.1%
-of keys rewrites GBs, not the table.
+Generic-source note: ``upsert``/``delete_where``/``update`` rewrite
+only the files that hold a match (a broadcast semi-join on the source
+keys, or the predicate) — the driver collects only file-count-bounded
+(month, file) pairs. At 100 TB a merge touching 0.1% of keys rewrites
+GBs, not the table.
 
 Reference parity note: the reference (customer-revenue-analysis-sql-
 tableau, a MySQL dump + Tableau workbook) has no table-maintenance
@@ -36,8 +38,6 @@ mandate.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -146,13 +146,9 @@ class ManifestTable:
             )
         snap = self.version()
         head_files = mt.resolve_manifest(self.root, snap)["files"]
-        stage = os.path.join(self.base, "_pack_tmp", uuid.uuid4().hex[:12])
-        tmp = os.path.join(stage, f"r{snap + 1}")
-        df.repartition(2).write.mode("overwrite").partitionBy(
-            MONTH_COL
-        ).parquet(tmp)
-        added = mt.land_partitioned_files(tmp, self.base, f"r{snap + 1}-")
-        shutil.rmtree(stage, ignore_errors=True)
+        added = mt.stage_and_land(
+            df.repartition(2), self.root, f"r{snap + 1}-"
+        )
         payload, _reb = mt.commit_transaction(
             self.root,
             snap,
@@ -173,58 +169,20 @@ class ManifestTable:
     def upsert(self, source: DataFrame, key: str) -> dict:
         """MERGE: full-row upsert — matched files CoW-rewritten without
         the source keys, the source's rows landed as new files (update
-        = delete-old + insert-new), one commit tagged UPSERT."""
-        self._enforce(self.constraints(), source, "the MERGE source")
-        snap = self.version()
-        head = self.read(snap)
-        keys = source.select(key)
-        aff = (
-            head.withColumn("fname", F.input_file_name())
-            .join(F.broadcast(keys), key, "left_semi")
-            .select(MONTH_COL, "fname")
-            .distinct()
-            .collect()
-        )
-        affected: dict[str, list[str]] = {}
-        for r in aff:
-            affected.setdefault(r[MONTH_COL], []).append(
-                os.path.basename(r["fname"])
-            )
-        v = snap + 1
-        # staging is namespaced per WRITER (random token), never shared:
-        # under optimistic concurrency two racers both stage at snap+1,
-        # and a wholesale _pack_tmp cleanup here would rip a racer's
-        # in-flight files out from under it (r14 ADVICE). Each writer
-        # creates, fills, and removes ONLY its own token directory.
-        stage = os.path.join(self.base, "_pack_tmp", uuid.uuid4().hex[:12])
-        removed: dict[str, list[str]] = {}
-        added: dict[str, list[str]] = {}
-        for m, names in sorted(affected.items()):
-            names = sorted(set(names))
-            kept = self.spark.read.parquet(
-                *[f"{self.root}/{MONTH_COL}={m}/{n}" for n in names]
-            ).join(F.broadcast(keys), key, "left_anti")
-            tmp = os.path.join(stage, f"u{v}-{m}")
-            kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-            removed[m] = names
-            added[m] = mt.land_files(
-                tmp, os.path.join(self.base, f"{MONTH_COL}={m}"), f"u{v}-"
-            )
-        tmp = os.path.join(stage, f"i{v}")
-        src = source
+        = delete-old + insert-new), one commit tagged UPSERT. The
+        source must carry the partition column; it is validated before
+        any file is written."""
         if MONTH_COL not in source.columns:
-            # the source must carry the partition column; derive it the
-            # same way CREATE did if a date column is present
             raise ValueError(
                 f"upsert source must carry {MONTH_COL} (use "
                 f"F.date_format(date_col, 'yyyy-MM'))"
             )
-        src.write.mode("overwrite").partitionBy(MONTH_COL).parquet(tmp)
-        for m, ns in mt.land_partitioned_files(
-            tmp, self.base, f"i{v}-"
-        ).items():
-            added.setdefault(m, []).extend(ns)
-        shutil.rmtree(stage, ignore_errors=True)
+        self._enforce(self.constraints(), source, "the MERGE source")
+        snap = self.version()
+        v = snap + 1
+        removed, added = mt.stage_upsert(
+            self.spark, self.root, snap, source, key, f"u{v}-", f"i{v}-"
+        )
         payload, _reb = mt.commit_transaction(
             self.root, snap, removed, added, extra={"operation": "UPSERT"}
         )
@@ -247,43 +205,18 @@ class ManifestTable:
         removed = {m: list(head_files[m]) for m in months if m in head_files}
         added: dict[str, list[str]] = {}
         if predicate is not None:
-            v = snap + 1
             scope = self.read(snap).filter(~F.col(MONTH_COL).isin(months))
-            aff = (
-                scope.withColumn("fname", F.input_file_name())
-                .filter(predicate)
-                .select(MONTH_COL, "fname")
-                .distinct()
-                .collect()
+            # SQL DELETE removes only rows where the predicate is TRUE;
+            # a NULL predicate (null column) must KEEP the row, so the
+            # keep filter is NOT(coalesce(p, FALSE)), never the
+            # three-valued ~p (~NULL is NULL, which would drop the row)
+            rewritten, added = mt.rewrite_files(
+                self.spark, self.root,
+                mt.matched_files(scope, lambda d: d.filter(predicate)),
+                lambda d: d.filter(~F.coalesce(predicate, F.lit(False))),
+                f"d{snap + 1}-",
             )
-            affected: dict[str, list[str]] = {}
-            for r in aff:
-                affected.setdefault(r[MONTH_COL], []).append(
-                    os.path.basename(r["fname"])
-                )
-            # per-writer staging token — see upsert (r14 ADVICE)
-            stage = os.path.join(
-                self.base, "_pack_tmp", uuid.uuid4().hex[:12]
-            )
-            for m, names in sorted(affected.items()):
-                names = sorted(set(names))
-                # SQL DELETE removes only rows where the predicate is
-                # TRUE; a NULL predicate (null column) must KEEP the
-                # row, so the keep filter is NOT(coalesce(p, FALSE)),
-                # never the three-valued ~p (r14 ADVICE: ~NULL is
-                # NULL, which would silently delete the row)
-                kept = self.spark.read.option("basePath", self.root).parquet(
-                    *[f"{self.root}/{MONTH_COL}={m}/{n}" for n in names]
-                ).filter(
-                    ~F.coalesce(predicate, F.lit(False))
-                ).drop(MONTH_COL)
-                tmp = os.path.join(stage, f"d{v}-{m}")
-                kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-                removed.setdefault(m, []).extend(names)
-                added[m] = mt.land_files(
-                    tmp, os.path.join(self.base, f"{MONTH_COL}={m}"), f"d{v}-"
-                )
-            shutil.rmtree(stage, ignore_errors=True)
+            removed.update(rewritten)
         payload, _reb = mt.commit_transaction(
             self.root, snap, removed, added, extra={"operation": "DELETE"}
         )
@@ -393,41 +326,19 @@ class ManifestTable:
                 ]
             )
             self._enforce(cons, post, "the UPDATE's post-images")
-        aff = (
-            scope.withColumn("fname", F.input_file_name())
-            .filter(predicate)
-            .select(MONTH_COL, "fname")
-            .distinct()
-            .collect()
-        )
-        affected: dict[str, list[str]] = {}
-        for r in aff:
-            affected.setdefault(r[MONTH_COL], []).append(
-                os.path.basename(r["fname"])
-            )
-        stage = os.path.join(self.base, "_pack_tmp", uuid.uuid4().hex[:12])
-        removed: dict[str, list[str]] = {}
-        added: dict[str, list[str]] = {}
-        for m, names in sorted(affected.items()):
-            names = sorted(set(names))
-            df = self.spark.read.option("basePath", self.root).parquet(
-                *[f"{self.root}/{MONTH_COL}={m}/{n}" for n in names]
-            )
-            updated = df.select(
+        removed, added = mt.rewrite_files(
+            self.spark, self.root,
+            mt.matched_files(scope, lambda d: d.filter(predicate)),
+            lambda d: d.select(
                 *[
                     F.when(hit, assignments[c]).otherwise(F.col(c)).alias(c)
                     if c in assignments
                     else F.col(c)
-                    for c in df.columns
+                    for c in d.columns
                 ]
-            ).drop(MONTH_COL)
-            tmp = os.path.join(stage, f"up{v}-{m}")
-            updated.coalesce(1).write.mode("overwrite").parquet(tmp)
-            removed[m] = names
-            added[m] = mt.land_files(
-                tmp, os.path.join(self.base, f"{MONTH_COL}={m}"), f"up{v}-"
-            )
-        shutil.rmtree(stage, ignore_errors=True)
+            ),
+            f"up{v}-",
+        )
         payload, _reb = mt.commit_transaction(
             self.root, snap, removed, added, extra={"operation": "UPDATE"}
         )
@@ -446,12 +357,7 @@ class ManifestTable:
             )
         self._enforce(self.constraints(), source, "the INSERT source")
         snap = self.version()
-        v = snap + 1
-        stage = os.path.join(self.base, "_pack_tmp", uuid.uuid4().hex[:12])
-        tmp = os.path.join(stage, f"a{v}")
-        source.write.mode("overwrite").partitionBy(MONTH_COL).parquet(tmp)
-        added = mt.land_partitioned_files(tmp, self.base, f"a{v}-")
-        shutil.rmtree(stage, ignore_errors=True)
+        added = mt.stage_and_land(source, self.root, f"a{snap + 1}-")
         payload, _reb = mt.commit_transaction(
             self.root, snap, {}, added, extra={"operation": "INSERT"}
         )

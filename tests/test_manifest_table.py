@@ -134,6 +134,31 @@ def test_orphans_invisible_and_vacuumed(spark, staged):
     assert _digest(spark, root) == d0
 
 
+def test_vacuum_reclaims_abandoned_stages(tmp_path):
+    """A writer torn between its staged write and its cleanup leaves a
+    ``_pack_tmp/<token>`` behind: vacuum removes it once nothing under
+    it changed within the orphan grace window, and spares a fresh
+    stage (a live writer's). Driver metadata only — no Spark job."""
+    root = str(tmp_path / "tbl")
+    os.makedirs(root)
+    mt.init_manifest(root)
+    stages = os.path.join(root, "_pack_tmp")
+    old = os.path.join(stages, "torn", f"{MONTH_COL}=2001-01")
+    fresh = os.path.join(stages, "live")
+    for d in (old, fresh):
+        os.makedirs(d)
+        with open(os.path.join(d, "part-0.parquet"), "w") as fh:
+            fh.write("staged")
+    grace = 3600.0
+    past = os.path.getmtime(old) - 2 * grace
+    for d, subdirs, files in os.walk(os.path.join(stages, "torn")):
+        for p in [d] + [os.path.join(d, n) for n in subdirs + files]:
+            os.utime(p, (past, past))
+    assert mt.vacuum_manifested(root, grace_seconds=grace) == ([], [])
+    assert sorted(os.listdir(stages)) == ["live"]
+    assert os.listdir(fresh) == ["part-0.parquet"]
+
+
 def test_manifested_read_keeps_partition_pruning(spark, staged):
     """The explicit-file-list read with basePath must keep the hive
     partition column prunable — a month filter reads one partition."""
@@ -635,11 +660,11 @@ def _prepare_txn(spark, root, op, tag):
     non-append writers overlap; appends land in 2001-03."""
     v1 = mt.manifest_chain(root)[1]
     if op == "append":
-        landed = mt._land_coalesced(
-            spark, root, "2001-03", v1["files"]["2001-03"],
+        _removed, added = mt.rewrite_files(
+            spark, root, {"2001-03": v1["files"]["2001-03"]},
             lambda df: df, f"{tag}ap-",
         )
-        return {}, {"2001-03": landed}
+        return {}, added
     target = "2001-01"
     names = v1["files"][target]
     if op == "delete":
@@ -649,10 +674,9 @@ def _prepare_txn(spark, root, op, tag):
         if op == "merge"
         else (lambda df: df)
     )
-    landed = mt._land_coalesced(
-        spark, root, target, names, transform, f"{tag}{op[:2]}-"
+    return mt.rewrite_files(
+        spark, root, {target: names}, transform, f"{tag}{op[:2]}-"
     )
-    return {target: names}, {target: landed}
 
 
 @pytest.mark.parametrize("op1,op2", list(itertools.product(_TXN_OPS, _TXN_OPS)))
@@ -698,9 +722,9 @@ def test_txn_disjoint_rewrites_commute(spark, staged):
     2001-01 racing a compaction of 2001-02) must both land."""
     root, _d0 = staged
     v1 = mt.manifest_chain(root)[1]
-    packed = mt._land_coalesced(
-        spark, root, "2001-02", v1["files"]["2001-02"], lambda df: df, "cp-"
-    )
+    packed = mt.rewrite_files(
+        spark, root, {"2001-02": v1["files"]["2001-02"]}, lambda df: df, "cp-"
+    )[1]["2001-02"]
     mt.commit_transaction(
         root, 1, {"2001-01": v1["files"]["2001-01"]}, {}
     )  # delete wins v2
@@ -779,20 +803,20 @@ def test_cdf_classifies_all_change_types(spark, staged):
     root, _d0 = staged
     v1 = mt.manifest_chain(root)[1]
     # CoW rewrite of 2001-01: bump v where k % 2 == 0
-    upd_names = mt._land_coalesced(
-        spark, root, "2001-01", v1["files"]["2001-01"],
+    upd_names = mt.rewrite_files(
+        spark, root, {"2001-01": v1["files"]["2001-01"]},
         lambda df: df.withColumn(
             "v",
             F.when(F.col("k") % 2 == 0, F.col("v") + 1).otherwise(F.col("v")),
         ),
         "u2-",
-    )
+    )[1]["2001-01"]
     # appended new keys into 2001-03
-    ins_names = mt._land_coalesced(
-        spark, root, "2001-03", v1["files"]["2001-03"],
+    ins_names = mt.rewrite_files(
+        spark, root, {"2001-03": v1["files"]["2001-03"]},
         lambda df: df.withColumn("k", F.col("k") + 10_000),
         "n2-",
-    )
+    )[1]["2001-03"]
     files = {
         "2001-01": upd_names,  # rewrite
         # 2001-02 dropped (delete)
@@ -1090,13 +1114,13 @@ def test_cdf_across_schema_evolution(spark, tmp_path):
     v1 = mt.manifest_chain(root)[1]
     # rewrite the single file into an EVOLVED schema: new column w,
     # populated only for even k; v carried unchanged
-    evolved = mt._land_coalesced(
-        spark, root, "2001-01", v1["files"]["2001-01"],
+    evolved = mt.rewrite_files(
+        spark, root, {"2001-01": v1["files"]["2001-01"]},
         lambda d: d.withColumn(
             "w", F.when(F.col("k") % 2 == 0, F.lit(1.5))
         ),
         "e2-",
-    )
+    )[1]["2001-01"]
     mt.commit_manifest(
         root, {"version": 2, "files": {"2001-01": evolved}}
     )
@@ -1134,9 +1158,9 @@ def test_threaded_appenders_all_land(spark, staged):
 
     def writer(i):
         m = months[i % len(months)]
-        landed = mt._land_coalesced(
-            spark, root, m, v1["files"][m], lambda df: df, f"w{i}x-"
-        )
+        landed = mt.rewrite_files(
+            spark, root, {m: v1["files"][m]}, lambda df: df, f"w{i}x-"
+        )[1][m]
         payload, _reb = mt.commit_transaction(root, 1, {}, {m: landed})
         return payload["version"]
 
@@ -1165,10 +1189,10 @@ def test_threaded_rewriters_exactly_one_wins(spark, staged):
     m = sorted(v1["files"])[0]
 
     def writer(i):
-        landed = mt._land_coalesced(
-            spark, root, m, v1["files"][m],
+        landed = mt.rewrite_files(
+            spark, root, {m: v1["files"][m]},
             lambda df: df.withColumn("v", F.col("v") + 100 + i), f"r{i}-",
-        )
+        )[1][m]
         try:
             mt.commit_transaction(
                 root, 1, {m: v1["files"][m]}, {m: landed}

@@ -325,3 +325,24 @@ def test_session_conf_is_written_only_by_session_py():
         if "conf.set(" in line or "conf.unset(" in line
     ]
     assert not offenders, f"session conf written outside session.py: {offenders}"
+
+
+def test_manifest_writes_stage_only_through_stage_and_land():
+    """Manifest-table files land only through
+    ``manifest_table.stage_and_land`` (a private ``_pack_tmp/<token>``
+    per call) and matched files are found only by
+    ``manifest_table.matched_files``: a hand-rolled staging path another
+    writer can derive, or a wholesale ``_pack_tmp`` cleanup, destroys
+    a concurrent writer's in-flight files."""
+    pkg = Path(__file__).resolve().parents[1] / "customer_revenue_analysis_sql_tableau_spark"
+    owner = pkg / "sources" / "manifest_table.py"
+    owned = ("land_files(", "land_partitioned_files(", "F.input_file_name(", '"_pack_tmp"')
+    offenders = [
+        f"{p.relative_to(pkg)}:{i}: {tok}"
+        for p in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        for tok in (*owned, "_stream_tmp")
+        if tok in line and (p != owner or tok not in owned)
+    ]
+    assert not offenders, f"staging outside stage_and_land: {offenders}"
+    assert owner.read_text().count("F.input_file_name(") == 1

@@ -90,10 +90,25 @@ def test_api_lifecycle_and_history(spark, table):
     assert _dig(t) == d_pre
 
 
+def _partition_listing(t):
+    return {
+        d: sorted(os.listdir(os.path.join(t.base, d)))
+        for d in sorted(os.listdir(t.base))
+        if d.startswith(f"{MONTH_COL}=")
+    }
+
+
 def test_api_upsert_requires_partition_column(spark, table):
+    """The source is validated before any file is written: key 1
+    matches a row, yet a rejected call lands no rewrite and leaves no
+    staging behind."""
+    before = _partition_listing(table)
     src = spark.createDataFrame([(1, 2.0)], "k bigint, v double")
     with pytest.raises(ValueError, match=MONTH_COL):
         table.upsert(src, key="k")
+    assert _partition_listing(table) == before
+    stages = os.path.join(table.base, "_pack_tmp")
+    assert not os.path.isdir(stages) or os.listdir(stages) == []
 
 
 def test_api_stale_writer_conflicts_through_facade(spark, table):
@@ -235,23 +250,34 @@ def test_mutations_preserve_schema_pin_and_stats(spark, table):
 
 
 def test_writer_staging_is_private(spark, table):
-    """Per-writer staging (r14 ADVICE): a mutation must not rm -rf the
-    shared _pack_tmp dir — another writer's in-flight staging survives,
-    and the writer's own staging is cleaned up."""
+    """Per-writer staging: a mutation must not rm -rf the shared
+    _pack_tmp dir or any path another writer can derive — another
+    writer's in-flight staging survives, and the writer's own staging
+    is cleaned up. ``_pack_tmp/part_month=<m>`` is where a second
+    writer optimizing the same month from the same snapshot would
+    stage if staging paths were derived from the month."""
     t = table
-    foreign = os.path.join(t.base, "_pack_tmp", "other-writer", "f.parquet")
-    os.makedirs(os.path.dirname(foreign), exist_ok=True)
-    with open(foreign, "w") as fh:
-        fh.write("in-flight")
+    m = "2001-01"
+    foreign = [
+        os.path.join(t.base, "_pack_tmp", d, "f.parquet")
+        for d in ("other-writer", f"{MONTH_COL}={m}")
+    ]
+    for f in foreign:
+        os.makedirs(os.path.dirname(f), exist_ok=True)
+        with open(f, "w") as fh:
+            fh.write("in-flight")
     src = t.read().filter(F.col("k") % 50 == 0).withColumn(
         "v", F.col("v") + 1.0
     )
     t.upsert(src, key="k")
     t.delete_where(predicate=F.col("k") % 77 == 3)
-    assert os.path.exists(foreign), "foreign staging was destroyed"
+    t.optimize([m])
+    t.optimize([m], zorder_by=("k", "v"))
+    for f in foreign:
+        assert os.path.exists(f), f"foreign staging was destroyed: {f}"
     leftovers = [
         d
         for d in os.listdir(os.path.join(t.base, "_pack_tmp"))
-        if d != "other-writer"
+        if d not in ("other-writer", f"{MONTH_COL}={m}")
     ]
     assert leftovers == [], f"writer left staging behind: {leftovers}"

@@ -11,17 +11,25 @@ at 100 TB the dims are still ~MBs while facts are TBs).
 This module is the only code that writes the session conf:
 :func:`apply_runtime_confs` pins the engine defaults, and a query path
 that needs a different value for the length of one call takes it
-through :func:`scoped_conf`.
+through :func:`scoped_conf`. It is also the only code that starts a
+stream: :func:`drain` runs writers to completion, :func:`drain_to_frame`
+reads a drained memory sink, :func:`read_file_stream` opens a parquet
+file source and :func:`stage_deliveries` stages its delivery files.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import threading
-from collections.abc import Iterator
+import time
+import uuid
+from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 #: Runtime-settable confs, safe to (re)apply to an externally-provided
 #: session (the driver owns the session for `__spark_entry__` calls).
@@ -196,3 +204,93 @@ def checkpoint_layout(
         return raw
     with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         return relaid.localCheckpoint()
+
+
+def drain(*streams: tuple[DataStreamWriter, str]) -> list[StreamingQuery]:
+    """Run each ``(writer, checkpoint_dir)`` to completion with an
+    ``availableNow`` trigger; return the stopped queries (``runId``,
+    ``recentProgress``).
+
+    Every query starts before any is awaited, so concurrent writers
+    really race. If a start or a query fails, every query still active
+    is stopped before the first error re-raises: no query outlives the
+    call, whose caller may be about to delete the stream's directories.
+    """
+    started: list[StreamingQuery] = []
+    try:
+        for writer, checkpoint_dir in streams:
+            started.append(
+                writer.option("checkpointLocation", checkpoint_dir)
+                .trigger(availableNow=True)
+                .start()
+            )
+        for query in started:
+            query.awaitTermination()
+    except BaseException:
+        for query in started:
+            if query.isActive:
+                query.stop()
+        raise
+    return started
+
+
+def drain_to_frame(stream: DataFrame, checkpoint_dir: str, mode: str) -> DataFrame:
+    """:func:`drain` ``stream`` into a memory sink in output ``mode`` and
+    return the sink's rows.
+
+    The sink gets a fresh name per call and its temp view is dropped
+    before returning, so a drain leaves no view in the caller's session
+    and two drains on one session never collide. The returned frame is
+    already resolved to the sink, so it reads after the drop.
+    """
+    name = f"drain_{uuid.uuid4().hex}"
+    spark = stream.sparkSession
+    try:
+        writer = stream.writeStream.format("memory").queryName(name)
+        drain((writer.outputMode(mode), checkpoint_dir))
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def read_file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    max_files_per_trigger: int | None = None,
+    schema: str | None = None,
+) -> DataFrame:
+    """Parquet file-source stream over ``source_dir`` (schema inferred
+    from the staged files unless declared), ``maxFilesPerTrigger`` files
+    per micro-batch when given. A ``ts`` column written as
+    ``timestamp[us]`` without zone reads as TIMESTAMP_NTZ, which
+    ``withWatermark`` rejects; it is cast to TIMESTAMP, value-preserving
+    under the engine's UTC session zone."""
+    reader = spark.readStream.schema(schema or spark.read.parquet(source_dir).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    raw = reader.parquet(source_dir)
+    if dict(raw.dtypes).get("ts") == "timestamp_ntz":
+        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return raw
+
+
+def stage_deliveries(frames: Iterable[DataFrame], src_dir: str) -> str:
+    """Write each frame as one ``coalesce(1)`` parquet delivery under the
+    local directory ``src_dir``; return ``src_dir``.
+
+    The file source orders micro-batches by modification time, so the
+    deliveries get strictly increasing mtimes (10 s apart, in the past):
+    with ``maxFilesPerTrigger=1`` delivery k is micro-batch k. A later
+    call on the same directory stamps after every delivery already
+    there, so a restarted stream sees the new files last.
+    """
+    seen = set(glob.glob(f"{src_dir}/part-*.parquet"))
+    stamp = time.time() - 1000 + 10 * len(seen)
+    for df in frames:
+        df.coalesce(1).write.mode("append").parquet(src_dir)
+        new = set(glob.glob(f"{src_dir}/part-*.parquet")) - seen
+        for f in new:
+            os.utime(f, (stamp, stamp))
+        seen |= new
+        stamp += 10
+    return src_dir

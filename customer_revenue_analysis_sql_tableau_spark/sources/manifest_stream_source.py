@@ -1,6 +1,6 @@
 """The manifested table as a STREAMING SOURCE (Spark 4 Python
-DataSource API) — the missing half of the streaming story: r13/r14
-built exactly-once sinks INTO the table; this module lets Structured
+DataSource API) — the other half of the streaming story: the
+exactly-once sinks write INTO the table; this module lets Structured
 Streaming read FROM it, the Delta ``readStream``-on-a-table contract.
 
 ``format("manifest_table_stream")`` tails the commit chain: the offset
@@ -44,6 +44,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..session import drain
 from .parquet import MONTH_COL
 
 #: The source's fixed schema: the append-table delivery columns + the
@@ -100,7 +101,7 @@ class ManifestTableStreamReader(DataSourceStreamReader):
             added, removed = incremental_files(self.root, v - 1, v)
             if removed and not self.ignore_changes:
                 # the row source's append-only contract is ENFORCED,
-                # not just documented (r14 ADVICE): an update/delete/
+                # not just documented: an update/delete/
                 # OPTIMIZE commit re-lands carried rows in new files,
                 # which this source would re-emit as duplicates. Fail
                 # loudly like Delta's readStream on a non-append
@@ -288,12 +289,11 @@ class ManifestTableCDFStreamReader(DataSourceStreamReader):
             added, removed = incremental_files(self.root, v - 1, v)
             if not (added or removed):
                 continue
-            # r14's one-partition-per-commit classification was the
-            # last driver-side scale cliff in the streaming story: a
-            # huge commit classified single-threaded. Splitting by
-            # key-range overlap components keeps pre/post for every
-            # key together while letting disjoint file pairs classify
-            # on separate executors.
+            # one partition per commit would classify a huge commit
+            # single-threaded on one executor. Splitting by key-range
+            # overlap components keeps pre/post for every key together
+            # while letting disjoint file pairs classify on separate
+            # executors.
             for grp_added, grp_removed in _overlap_components(
                 self.base, added, removed, self.key
             ):
@@ -372,6 +372,26 @@ def register_manifest_stream_source(spark: SparkSession) -> None:
     spark.dataSource.register(ManifestTableCDFStreamDataSource)
 
 
+def _drain_table_stream(
+    spark: SparkSession, fmt: str, root: str, schema: str
+) -> DataFrame:
+    """Drain the ``fmt`` stream of the table at ``root`` into a temp
+    parquet sink and return the sink (``part_month`` as ``pm``),
+    localCheckpointed so the temp state can be deleted."""
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix="manifest_srcstream_")
+    try:
+        stream = spark.readStream.format(fmt).option("root", root).load()
+        sink = stream.writeStream.format("parquet").option("path", f"{tmp}/sink")
+        drain((sink, f"{tmp}/ckpt"))
+        out = spark.read.schema(schema).parquet(f"{tmp}/sink")
+        return out.withColumnRenamed(MONTH_COL, "pm").localCheckpoint()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def stream_manifest_source_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -385,9 +405,6 @@ def stream_manifest_source_drain(
     a wrong month injection hash-fails. I/O posture: each micro-batch
     reads only its commits' added files, one executor partition per
     file."""
-    import shutil
-    import tempfile
-
     from ..catalog import ensure_utc_session
     from .manifest_table import (
         _stream_append_root,
@@ -402,25 +419,9 @@ def stream_manifest_source_drain(
     stream_manifest_append_drain(spark, sf_dir)  # ensure the universe
     root = _stream_append_root(spark, sf_dir)
     register_manifest_stream_source(spark)
-    tmp = tempfile.mkdtemp(prefix="manifest_srcstream_")
-    try:
-        (
-            spark.readStream.format("manifest_table_stream")
-            .option("root", root)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", f"{tmp}/sink")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        out = spark.read.schema(STREAM_SOURCE_SCHEMA).parquet(
-            f"{tmp}/sink"
-        )
-        return out.withColumnRenamed(MONTH_COL, "pm").localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _drain_table_stream(
+        spark, "manifest_table_stream", root, STREAM_SOURCE_SCHEMA
+    )
 
 
 def stream_manifest_cdf_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -431,12 +432,8 @@ def stream_manifest_cdf_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent. Row-level oracle: DuckDB recomputes every change row of
     every commit from the upsert schedule's semantics — a
     misclassified, duplicated, lost, or mispriced change anywhere in
-    the chain hash-fails. This is the r14 row-stream source's
-    documented gap closed: the table streams out under UPDATES, not
-    just appends."""
-    import shutil
-    import tempfile
-
+    the chain hash-fails. The table streams out under UPDATES, not
+    just appends, which the append-only row source refuses."""
     from ..catalog import ensure_utc_session
     from .manifest_table import (
         _stream_merge_root,
@@ -447,23 +444,9 @@ def stream_manifest_cdf_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_manifest_merge_drain(spark, sf_dir)  # ensure the universe
     root = _stream_merge_root(spark, sf_dir)
     register_manifest_stream_source(spark)
-    tmp = tempfile.mkdtemp(prefix="manifest_cdfstream_")
-    try:
-        (
-            spark.readStream.format("manifest_table_cdf_stream")
-            .option("root", root)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", f"{tmp}/sink")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        out = spark.read.schema(CDF_STREAM_SCHEMA).parquet(f"{tmp}/sink")
-        return out.withColumnRenamed(MONTH_COL, "pm").localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _drain_table_stream(
+        spark, "manifest_table_cdf_stream", root, CDF_STREAM_SCHEMA
+    )
 
 
 QUERIES = {

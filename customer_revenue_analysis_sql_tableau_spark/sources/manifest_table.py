@@ -61,7 +61,7 @@ import math
 import os
 import shutil
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,6 +74,7 @@ from ..lake_core import (
     json_manifest_chain,
     read_json,
 )
+from ..session import drain, read_file_stream, stage_deliveries
 from .compaction import (
     PART_COMPACT_CUTOFF,
     PART_STAGE_FILES,
@@ -248,7 +249,7 @@ def read_manifested(
     reader = spark.read.option("basePath", root)
     # a manifest may PIN the version's schema (the Iceberg/Delta
     # metadata role): readers then never pay a plan-time footer merge,
-    # and files predating an added column null-fill it (the r12
+    # and files predating an added column null-fill it (the
     # schema-evolution policy, carried by table metadata instead of a
     # caller-side catalog)
     if "schema" in snap:
@@ -909,6 +910,31 @@ def publish_stream_append_batch(
     commit_manifest(root, {"version": ver, "files": files})
 
 
+#: The orders delivery columns the manifest stream drains read.
+ORDERS_STREAM_SCHEMA = (
+    "o_orderkey bigint, o_custkey bigint, o_totalprice double, o_orderdate timestamp"
+)
+
+
+def _drain_order_deliveries(
+    spark: SparkSession,
+    deliveries: Iterable[DataFrame],
+    on_batch: Callable[[DataFrame, int], None],
+) -> None:
+    """Stage ``deliveries`` as ordered one-file orders deliveries in a
+    temp dir and drain them, one per micro-batch, through
+    ``foreachBatch(on_batch)``."""
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix="manifest_stream_")
+    try:
+        src = stage_deliveries(deliveries, f"{tmp}/src")
+        raw = read_file_stream(spark, src, 1, ORDERS_STREAM_SCHEMA)
+        drain((raw.writeStream.foreachBatch(on_batch), f"{tmp}/ckpt"))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def stream_manifest_append_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -932,11 +958,6 @@ def stream_manifest_append_drain(
     (disjoint + covering, via one tagged aggregation). Scale posture:
     per-batch work is the batch's own write + a KB manifest commit;
     the incremental-read verification is proof cost."""
-    import glob
-    import shutil
-    import tempfile
-    import time
-
     root = _stream_append_root(spark, sf_dir)
     base = root.removeprefix("file:")
     n_expected = STREAM_APPEND_BATCHES + 1
@@ -969,34 +990,14 @@ def stream_manifest_append_drain(
         def on_batch(batch_df: DataFrame, batch_id: int) -> None:
             publish_stream_append_batch(root, batch_df, batch_id)
 
-        tmp = tempfile.mkdtemp(prefix="manifest_stream_")
-        try:
-            src = f"{tmp}/src"
-            base_ts = time.time() - 1000
-            seen: set[str] = set()
-            for k in range(STREAM_APPEND_BATCHES):
-                delivery.filter(
-                    F.col("o_orderkey") % STREAM_APPEND_BATCHES == k
-                ).coalesce(1).write.mode("append").parquet(src)
-                for f in glob.glob(f"{src}/part-*.parquet"):
-                    if f not in seen:
-                        seen.add(f)
-                        os.utime(f, (base_ts + k * 10, base_ts + k * 10))
+        _drain_order_deliveries(
+            spark,
             (
-                spark.readStream.schema(
-                    "o_orderkey bigint, o_custkey bigint,"
-                    " o_totalprice double, o_orderdate timestamp"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .writeStream.foreachBatch(on_batch)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+                delivery.filter(F.col("o_orderkey") % STREAM_APPEND_BATCHES == k)
+                for k in range(STREAM_APPEND_BATCHES)
+            ),
+            on_batch,
+        )
 
     # ---- recompute the contract from the persisted chain ----
     cur = chain()
@@ -1114,11 +1115,6 @@ def stream_manifest_merge_drain(
     (mod-0 keys were re-delivered and updated twice), present exactly
     once — a torn-batch double-apply, a lost neighbor in a rewritten
     file, or a stale image all hash-fail."""
-    import glob
-    import shutil
-    import tempfile
-    import time
-
     root = _stream_merge_root(spark, sf_dir)
     base = root.removeprefix("file:")
     n_expected = STREAM_MERGE_BATCHES + 1
@@ -1142,37 +1138,18 @@ def stream_manifest_merge_drain(
         def on_batch(batch_df: DataFrame, batch_id: int) -> None:
             publish_stream_merge_batch(spark, root, batch_df, batch_id)
 
-        tmp = tempfile.mkdtemp(prefix="manifest_smerge_")
-        try:
-            src = f"{tmp}/src"
-            base_ts = time.time() - 1000
-            seen: set[str] = set()
-            for k in range(STREAM_MERGE_BATCHES):
-                mod = F.col("o_orderkey") % STREAM_MERGE_BATCHES
+        mod = F.col("o_orderkey") % STREAM_MERGE_BATCHES
+        _drain_order_deliveries(
+            spark,
+            (
                 delivery.filter((mod == 0) | (mod == k)).withColumn(
                     "o_totalprice",
-                    F.col("o_totalprice")
-                    + F.lit(k * STREAM_MERGE_BUMP),
-                ).coalesce(1).write.mode("append").parquet(src)
-                for f in glob.glob(f"{src}/part-*.parquet"):
-                    if f not in seen:
-                        seen.add(f)
-                        os.utime(f, (base_ts + k * 10, base_ts + k * 10))
-            (
-                spark.readStream.schema(
-                    "o_orderkey bigint, o_custkey bigint,"
-                    " o_totalprice double, o_orderdate timestamp"
+                    F.col("o_totalprice") + F.lit(k * STREAM_MERGE_BUMP),
                 )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-                .writeStream.foreachBatch(on_batch)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+                for k in range(STREAM_MERGE_BATCHES)
+            ),
+            on_batch,
+        )
 
     return read_manifested(spark, root).select(
         "o_orderkey",
@@ -1205,9 +1182,9 @@ def _schev_root(spark: SparkSession, sf_dir: str) -> str:
 def parquet_manifest_schema_evolution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """SCHEMA EVOLUTION carried by table METADATA — the piece the r12
-    policy work said a 100 TB table needs ("pin the union schema in a
-    catalog"), now provided by the table itself: v1 commits the
+    """SCHEMA EVOLUTION carried by table METADATA — what a 100 TB
+    table needs ("pin the union schema in a catalog"), provided by the
+    table itself: v1 commits the
     pre-append months with a 3-column schema pinned IN the manifest;
     the append commit lands new months whose files carry an added
     ``o_totalprice`` column and pins the 4-column union schema in

@@ -44,13 +44,13 @@ this module belongs to the driver's large-scale-pipeline mandate.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import source_fingerprint
+from ..session import drain, read_file_stream, stage_deliveries
 from .parquet import MONTH_COL
 from . import manifest_table as mt
 
@@ -169,7 +169,6 @@ def stream_manifest_two_writers(
     Idempotent: a complete universe (head == v6) is read back; an
     incomplete (torn) one is rebuilt from scratch."""
     import tempfile
-    import time
 
     from ..catalog import ensure_utc_session, load_tables
     from .table_api import ManifestTable
@@ -199,45 +198,20 @@ def stream_manifest_two_writers(
         }
         tmp = tempfile.mkdtemp(prefix="manifest_twow_")
         try:
-            queries = []
+            streams = []
             for writer, batches in deliveries.items():
-                src = f"{tmp}/{writer}/src"
-                os.makedirs(src, exist_ok=True)
-                base_ts = time.time() - 1000
-                for k, b in enumerate(batches):
-                    # stage OUTSIDE src: the file stream source lists
-                    # src recursively, so only clean per-batch parquet
-                    # files (mtime-ordered) may live under it
-                    stage_dir = f"{tmp}/{writer}/stage{k}"
-                    b.coalesce(1).write.mode("overwrite").parquet(
-                        stage_dir
-                    )
-                    dst = os.path.join(src, f"{writer}-b{k}.parquet")
-                    for f in os.listdir(stage_dir):
-                        if f.endswith(".parquet"):
-                            shutil.move(os.path.join(stage_dir, f), dst)
-                    os.utime(dst, (base_ts + k * 10, base_ts + k * 10))
+                src = stage_deliveries(batches, f"{tmp}/{writer}/src")
 
                 def on_batch(bdf, bid, _w=writer):
                     publish_stream_merge_txn(spark, root, bdf, _w, int(bid))
 
-                q = (
-                    spark.readStream.schema(
-                        "o_orderkey bigint, o_custkey bigint,"
-                        " o_totalprice double, o_orderdate timestamp"
-                    )
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(src)
-                    .writeStream.foreachBatch(on_batch)
-                    .option("checkpointLocation", f"{tmp}/{writer}/ckpt")
-                    .trigger(availableNow=True)
-                    .start()
+                raw = read_file_stream(spark, src, 1, mt.ORDERS_STREAM_SCHEMA)
+                streams.append(
+                    (raw.writeStream.foreachBatch(on_batch), f"{tmp}/{writer}/ckpt")
                 )
-                queries.append(q)
-            # both queries live before either is awaited — the drains
-            # are concurrent and their commits race
-            for q in queries:
-                q.awaitTermination()
+            # drain starts both queries before awaiting either: the
+            # drains are concurrent and their commits race
+            drain(*streams)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 

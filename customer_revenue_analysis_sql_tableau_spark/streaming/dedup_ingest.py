@@ -41,6 +41,7 @@ from ..operators.dedup import (
 )
 from ..operators.pipeline import QUALITY_T
 from ..operators.text import quality_scored
+from ..session import drain, read_file_stream
 from .statefs import list_subdirs
 
 
@@ -152,21 +153,12 @@ def run_streaming_minhash_dedup(
     foreachBatch checkpoint log guarantees committed batches are never
     re-run at all.
     """
-    schema = spark.read.parquet(source_dir).schema
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         _dedup_batch(spark, work_dir, batch_df, batch_id)
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    raw = read_file_stream(spark, source_dir, max_files_per_trigger=1)
+    drain((raw.writeStream.foreachBatch(process), checkpoint_dir))
     return _accumulated_pairs(spark, work_dir)
 
 
@@ -294,13 +286,13 @@ def run_streaming_ingest_pipeline(
     work_dir: str,
     quality_t: float = QUALITY_T,
 ) -> tuple[DataFrame, DataFrame]:
-    """The full training-data ingest path as a stream (VERDICT.md r3,
-    Next #5): per micro-batch, apply the quality gate and the
-    benchmark-decontamination gate (both pure per-row projections — the
-    batch's own rows plus one broadcast of the static eval k-gram set),
-    then feed only the survivors into the persistent MinHash dedup
-    index. Requires :func:`seed_eval_grams` (and, optionally,
-    :func:`seed_dedup_index` for a pre-existing corpus).
+    """The full training-data ingest path as a stream: per micro-batch,
+    apply the quality gate and the benchmark-decontamination gate (both
+    pure per-row projections — the batch's own rows plus one broadcast
+    of the static eval k-gram set), then feed only the survivors into
+    the persistent MinHash dedup index. Requires
+    :func:`seed_eval_grams` (and, optionally, :func:`seed_dedup_index`
+    for a pre-existing corpus).
 
     Returns ``(verdicts, pairs)``: per-doc gate verdicts
     ``(doc_id, quality_score, containment, kept, reason)`` for every
@@ -315,21 +307,12 @@ def run_streaming_ingest_pipeline(
     from the pair-set equality test.
     """
     eval_grams = spark.read.parquet(f"{work_dir}/eval_grams").localCheckpoint()
-    schema = spark.read.parquet(source_dir).schema
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         _ingest_batch(spark, work_dir, eval_grams, batch_df, batch_id, quality_t)
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    raw = read_file_stream(spark, source_dir, max_files_per_trigger=1)
+    drain((raw.writeStream.foreachBatch(process), checkpoint_dir))
     verdicts = _read_store(spark, f"{work_dir}/verdicts")
     if verdicts is None:
         verdicts = spark.createDataFrame(

@@ -16,14 +16,14 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..operators.decontamination import DECON_K, DECON_T, EVAL_MOD, _kgrams_sql
 from ..operators.pipeline import QUALITY_T
 from ..operators.text import QUALITY_SQL
-from ..session import scoped_conf
+from ..session import scoped_conf, stage_deliveries
 from .dedup_ingest import run_streaming_ingest_pipeline, seed_eval_grams
 from .windows import (
     ORACLES as _WINDOW_ORACLES,
@@ -61,6 +61,20 @@ def _drain(spark: SparkSession, build) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+#: Delivery split for the late-data drain: three event_id-keyed thirds,
+#: each spanning the whole event-time range (ids are time-ordered, so a
+#: modulus split leaves every delivery with old AND new rows).
+LATE_SPLIT_MOD = 3
+
+
+def _stage_thirds(df: DataFrame, key: Column, src: str) -> str:
+    """Stage the ``key % 3`` thirds of ``df`` as three ordered one-file
+    deliveries (delivery k is micro-batch k)."""
+    return stage_deliveries(
+        (df.filter(key % LATE_SPLIT_MOD == k) for k in range(LATE_SPLIT_MOD)), src
+    )
+
+
 def stream_user_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain a 3-file events delivery through the foreachBatch MERGE
     serving table (versioned exactly-once state); the result must
@@ -70,12 +84,9 @@ def stream_user_upsert_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
 
     def build(tmp: str) -> DataFrame:
-        for k in (0, 1, 2):
-            events.filter(F.col("event_id") % 3 == k).coalesce(1).write.mode(
-                "append"
-            ).parquet(f"{tmp}/src")
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
         return run_foreach_batch_upsert_stream(
-            spark, f"{tmp}/src", f"{tmp}/ckpt", f"{tmp}/state"
+            spark, src, f"{tmp}/ckpt", f"{tmp}/state"
         )
 
     return _drain(spark, build)
@@ -97,12 +108,9 @@ def stream_ingest_verdicts_drain(
 
     def build(tmp: str) -> DataFrame:
         seed_eval_grams(eval_docs, f"{tmp}/work")
-        for k in (0, 1, 2):
-            train.filter(F.col("doc_id") % 3 == k).coalesce(1).write.mode(
-                "append"
-            ).parquet(f"{tmp}/src")
+        src = _stage_thirds(train, F.col("doc_id"), f"{tmp}/src")
         verdicts, _pairs = run_streaming_ingest_pipeline(
-            spark, f"{tmp}/src", f"{tmp}/ckpt", f"{tmp}/work"
+            spark, src, f"{tmp}/ckpt", f"{tmp}/work"
         )
         return verdicts
 
@@ -129,10 +137,8 @@ def stream_resumable_restart_drain(
 
     def build(tmp: str) -> DataFrame:
         src, ckpt, sink = f"{tmp}/src", f"{tmp}/ckpt", f"{tmp}/sink"
-        for k in (0, 1):
-            events.filter(F.col("event_id") % 4 == k).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
+        quarter = F.col("event_id") % 4
+        stage_deliveries((events.filter(quarter == k) for k in (0, 1)), src)
         run_resumable_stream(spark, src, ckpt, sink)  # partial delivery
         # crashed-batch leftovers: schema-compatible rows the manifest
         # never committed, with values no committed row can take
@@ -143,10 +149,7 @@ def stream_resumable_restart_drain(
             F.col("ts").cast("timestamp").alias("ts"),
             F.lit(-1.0).alias("double_value"),
         ).coalesce(1).write.mode("append").parquet(sink)
-        for k in (2, 3):
-            events.filter(F.col("event_id") % 4 == k).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
+        stage_deliveries((events.filter(quarter == k) for k in (2, 3)), src)
         return run_resumable_stream(spark, src, ckpt, sink)
 
     return _drain(spark, build)
@@ -163,11 +166,8 @@ def stream_cdc_latest_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
 
     def build(tmp: str) -> DataFrame:
-        for k in (0, 1, 2):
-            events.filter(F.col("event_id") % 3 == k).coalesce(1).write.mode(
-                "append"
-            ).parquet(f"{tmp}/src")
-        return run_latest_state_stream(spark, f"{tmp}/src", f"{tmp}/ckpt")
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
+        return run_latest_state_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
 
@@ -181,12 +181,6 @@ def _stage_events(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     load_tables(spark, sf_dir, names=("events",), register=False)[
         "events"
     ].write.parquet(f"{tmp}/src")
-
-
-#: Delivery split for the late-data drain: three event_id-keyed thirds,
-#: each spanning the whole event-time range (ids are time-ordered, so a
-#: modulus split leaves every delivery with old AND new rows).
-LATE_SPLIT_MOD = 3
 
 
 def stream_late_data_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,33 +203,10 @@ def stream_late_data_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
 
     def build(tmp: str) -> DataFrame:
-        src = _stage_three_deliveries(events, tmp)
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
         return run_late_data_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
-
-
-def _stage_three_deliveries(events: DataFrame, tmp: str) -> str:
-    """Write the event_id % 3 thirds as three one-file deliveries with
-    strictly increasing mtimes (the file source orders batches by
-    modification time, so delivery k IS batch k; the drains stage on a
-    local temp dir, so os.utime applies)."""
-    import glob
-    import os
-    import time
-
-    src = f"{tmp}/src"
-    base = time.time() - 1000
-    seen: set[str] = set()
-    for k in range(LATE_SPLIT_MOD):
-        events.filter(
-            F.col("event_id") % LATE_SPLIT_MOD == k
-        ).coalesce(1).write.mode("append").parquet(src)
-        for f in glob.glob(f"{src}/part-*.parquet"):
-            if f not in seen:
-                seen.add(f)
-                os.utime(f, (base + k * 10, base + k * 10))
-    return src
 
 
 def stream_crossbatch_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,32 +234,22 @@ def stream_crossbatch_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame
         "events"
     ]
 
-    def build(tmp: str) -> DataFrame:
-        import glob
-        import os
-        import time
-
-        src = f"{tmp}/src"
-        base = time.time() - 1000
-        seen: set[str] = set()
-        for k in range(LATE_SPLIT_MOD):
-            collapsed = (
-                events.filter(F.col("event_id") % LATE_SPLIT_MOD == k)
-                .groupBy("user_id", "event_type")
-                .agg(F.min(F.struct("ts", "event_id", "value")).alias("s"))
-                .select(
-                    F.col("s.event_id").alias("event_id"),
-                    F.col("s.ts").alias("ts"),
-                    "user_id",
-                    "event_type",
-                    F.col("s.value").alias("value"),
-                )
+    def collapsed(k: int) -> DataFrame:
+        return (
+            events.filter(F.col("event_id") % LATE_SPLIT_MOD == k)
+            .groupBy("user_id", "event_type")
+            .agg(F.min(F.struct("ts", "event_id", "value")).alias("s"))
+            .select(
+                F.col("s.event_id").alias("event_id"),
+                F.col("s.ts").alias("ts"),
+                "user_id",
+                "event_type",
+                F.col("s.value").alias("value"),
             )
-            collapsed.coalesce(1).write.mode("append").parquet(src)
-            for f in glob.glob(f"{src}/part-*.parquet"):
-                if f not in seen:
-                    seen.add(f)
-                    os.utime(f, (base + k * 10, base + k * 10))
+        )
+
+    def build(tmp: str) -> DataFrame:
+        src = stage_deliveries(map(collapsed, range(LATE_SPLIT_MOD)), f"{tmp}/src")
         return run_crossbatch_dedup_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
@@ -345,7 +306,7 @@ def stream_late_session_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
 
     def build(tmp: str) -> DataFrame:
-        src = _stage_three_deliveries(events, tmp)
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
         return run_late_session_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
@@ -366,12 +327,9 @@ def stream_static_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = t["customer"].select("c_custkey", "c_mktsegment")
 
     def build(tmp: str) -> DataFrame:
-        for k in (0, 1, 2):
-            t["events"].filter(
-                F.col("event_id") % 3 == k
-            ).coalesce(1).write.mode("append").parquet(f"{tmp}/src")
+        src = _stage_thirds(t["events"], F.col("event_id"), f"{tmp}/src")
         sink = run_static_enrich_stream(
-            spark, f"{tmp}/src", f"{tmp}/ckpt", f"{tmp}/sink", dim
+            spark, src, f"{tmp}/ckpt", f"{tmp}/sink", dim
         )
         return (
             sink.groupBy("c_mktsegment", "event_type")
@@ -391,11 +349,10 @@ def stream_interval_join_multibatch_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Stream-stream JOIN state retention across micro-batches, under
-    the hash — REWORKED r9: probing showed the old form (no
-    ``maxFilesPerTrigger``) drained all three staged files in ONE
-    availableNow batch, so its "cross-batch retention" reading was a
-    single-batch artifact. Now the staging is adversarial and the
-    batches are real: delivery 1 carries every NON-error event
+    the hash. Without ``maxFilesPerTrigger`` the file source drains
+    every staged file in ONE availableNow batch (probed), so the
+    staging is adversarial and the batches are real: delivery 1
+    carries every NON-error event
     (clicks included), delivery 2 carries every error, and the join
     runs one file per micro-batch — so EVERY emitted pair requires a
     click held in join state across the batch boundary. The watermark
@@ -409,24 +366,10 @@ def stream_interval_join_multibatch_drain(
     ]
 
     def build(tmp: str) -> DataFrame:
-        import glob
-        import os
-        import time
-
-        src = f"{tmp}/src"
-        base = time.time() - 1000
-        seen: set[str] = set()
-        for k, part in enumerate(
-            (
-                events.filter(F.col("event_type") != "error"),
-                events.filter(F.col("event_type") == "error"),
-            )
-        ):
-            part.coalesce(1).write.mode("append").parquet(src)
-            for f in glob.glob(f"{src}/part-*.parquet"):
-                if f not in seen:
-                    seen.add(f)
-                    os.utime(f, (base + k * 10, base + k * 10))
+        is_error = F.col("event_type") == "error"
+        src = stage_deliveries(
+            (events.filter(~is_error), events.filter(is_error)), f"{tmp}/src"
+        )
         return run_interval_join_multibatch_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
@@ -463,7 +406,7 @@ def stream_interval_left_join_drain(
     ]
 
     def build(tmp: str) -> DataFrame:
-        src = _stage_three_deliveries(events, tmp)
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
         return run_interval_left_join_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
@@ -485,7 +428,7 @@ def stream_interval_full_join_drain(
     ]
 
     def build(tmp: str) -> DataFrame:
-        src = _stage_three_deliveries(events, tmp)
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
         return run_interval_full_join_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
@@ -496,9 +439,9 @@ def stream_interval_right_join_drain(
 ) -> DataFrame:
     """Right-outer stream-stream join under the driver hash — the
     mirror of :func:`stream_interval_left_join_drain`, completing the
-    join-type matrix symmetrically (r9 VERDICT Next #6). Same
-    3-delivery staging and probed admission rules; the null-gated side
-    flips to the CLICKS: the sink is the matched pair set plus
+    join-type matrix symmetrically. Same 3-delivery staging and probed
+    admission rules; the null-gated side flips to the CLICKS: the sink
+    is the matched pair set plus
     null-error rows for admitted clicks with no admitted matching
     error and ``click_ts + 10min < final_wm`` (strict — the same
     interval-derived eviction bound the full join's click branch
@@ -508,7 +451,7 @@ def stream_interval_right_join_drain(
     ]
 
     def build(tmp: str) -> DataFrame:
-        src = _stage_three_deliveries(events, tmp)
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
         return run_interval_right_join_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
@@ -525,9 +468,9 @@ def stream_timeout_sessions_drain(
     w2 == w3, and both engines correctly emit NOTHING (measured) —
     drain through the inactivity-timeout sessionizer. The terciles
     are VALUE splits at two exact ts order statistics (ranks
-    ceil(n/3) and ceil(2n/3), each a bounded TakeOrdered + max, no
-    global window over the full table — r9 ADVICE replaced the
-    eager unpartitioned ntile staging the plan scan couldn't see);
+    ceil(n/3) and ceil(2n/3), each a bounded TakeOrdered + max — no
+    unpartitioned global window such as an eager ntile over the full
+    table);
     the oracle recomputes the identical cut points relationally. The
     sink must equal the relational replay of the probed rules (see
     :func:`run_stateful_timeout_sessions`): per user, per batch,
@@ -543,13 +486,6 @@ def stream_timeout_sessions_drain(
     ]
 
     def build(tmp: str) -> DataFrame:
-        import glob
-        import os
-        import time
-
-        src = f"{tmp}/src"
-        base = time.time() - 1000
-        seen: set[str] = set()
         n = events.count()
         k1 = (n + 2) // 3  # rank ceil(n/3)
         k2 = (2 * n + 2) // 3  # rank ceil(2n/3)
@@ -563,14 +499,13 @@ def stream_timeout_sessions_drain(
             .when(F.col("ts") <= F.lit(cut2), 1)
             .otherwise(2),
         )
-        for k in range(LATE_SPLIT_MOD):
-            terciled.filter(F.col("b") == k).drop("b").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            for f in glob.glob(f"{src}/part-*.parquet"):
-                if f not in seen:
-                    seen.add(f)
-                    os.utime(f, (base + k * 10, base + k * 10))
+        src = stage_deliveries(
+            (
+                terciled.filter(F.col("b") == k).drop("b")
+                for k in range(LATE_SPLIT_MOD)
+            ),
+            f"{tmp}/src",
+        )
         return run_stateful_timeout_sessions(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
@@ -590,7 +525,7 @@ def stream_interval_semi_join_drain(
     ]
 
     def build(tmp: str) -> DataFrame:
-        src = _stage_three_deliveries(events, tmp)
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
         return run_interval_semi_join_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)
@@ -611,7 +546,7 @@ def stream_late_sliding_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
 
     def build(tmp: str) -> DataFrame:
-        src = _stage_three_deliveries(events, tmp)
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
         return run_late_sliding_stream(spark, src, f"{tmp}/ckpt")
 
     return _drain(spark, build)

@@ -60,6 +60,7 @@ from ..operators.similarity import (
     _probe_and_rank,
     sim_persisted_ingest_delta,
 )
+from ..session import drain, read_file_stream, stage_deliveries
 
 #: The delivery is staged as this many mtime-ordered files, drained
 #: one per micro-batch. With MERGE_TRIGGER_SEGMENTS = 2 the fold
@@ -89,10 +90,10 @@ def _apply_fold(
     spark: SparkSession, view: DataFrame, store_dir: str, version: int
 ) -> DataFrame:
     """ONE fold application — the reader algebra every maintained view
-    in this module is built from (r12 VERDICT Next #4: one definition,
-    not five inline copies): drop the fold's touched cells from the
-    view (its manifest lists them), union the fold's rewritten
-    postings. Applied in version order, later folds win their cells."""
+    in this module is built from (one definition, no inline copies):
+    drop the fold's touched cells from the view (its manifest lists
+    them), union the fold's rewritten postings. Applied in version
+    order, later folds win their cells."""
     man = spark.read.parquet(f"{store_dir}/merged_v{version}/manifest")
     return view.join(
         F.broadcast(man.select("cell")), "cell", "left_anti"
@@ -115,7 +116,7 @@ def _ensure_streamed_index(
     torn run has no manifest and re-enters the whole stream, whose
     per-segment ``overwrite`` writes make replay idempotent).
 
-    With ``retention=True`` (r12 VERDICT Next #5) the GC policy runs as
+    With ``retention=True`` the GC policy runs as
     a SCHEDULED per-batch step inside the maintenance loop, not a
     manual pass: after every micro-batch's commit+fold evaluation, the
     policy re-reads the ON-DISK manifest state, deletes any delta
@@ -283,37 +284,21 @@ def _ensure_streamed_index(
 
     tmp = tempfile.mkdtemp(prefix="stream_index_maint_")
     try:
-        import glob
-        import os
-        import time
-
         e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
         delivery = e.filter(
             F.col("vec_id") % DELIVERY_MOD == DELIVERY_MOD - 1
         ).select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
-        src = f"{tmp}/src"
-        base_ts = time.time() - 1000
-        seen: set[str] = set()
-        for k in range(N_STREAM_BATCHES):
-            delivery.filter(
-                F.col("vec_id") % N_STREAM_BATCHES == k
-            ).coalesce(1).write.mode("append").parquet(src)
-            for f in glob.glob(f"{src}/part-*.parquet"):
-                if f not in seen:
-                    seen.add(f)
-                    os.utime(f, (base_ts + k * 10, base_ts + k * 10))
-        (
-            spark.readStream.schema("vec_id bigint, v array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        src = stage_deliveries(
+            (
+                delivery.filter(F.col("vec_id") % N_STREAM_BATCHES == k)
+                for k in range(N_STREAM_BATCHES)
+            ),
+            f"{tmp}/src",
         )
+        raw = read_file_stream(spark, src, 1, "vec_id bigint, v array<double>")
+        drain((raw.writeStream.foreachBatch(on_batch), f"{tmp}/ckpt"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -606,8 +591,8 @@ def stream_index_asof_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold-applied as-of reader vs the flat stack, at the first batch
     # whose state has a committed fold (batch 1 in this configuration).
     # The digest covers the vector column v, not just (vec_id, cell) —
-    # a fold that corrupted vector VALUES must flip it (r12 ADVICE,
-    # matching sim_persisted_vacuum's value-level guarantee).
+    # a fold that corrupted vector VALUES must flip it (matching
+    # sim_persisted_vacuum's value-level guarantee).
     fold_b = MERGE_TRIGGER_SEGMENTS - 1
     folded_view = read_streamed_index_asof(spark, sf_dir, fold_b)
     flat = spark.read.parquet(f"{d}/postings").select("cell", "vec_id", "v")
@@ -682,7 +667,7 @@ def stream_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     dig_cols = ("vec_id", "cell", "v")
 
     def dig(df: DataFrame):
-        # covers the vector column v (r12 ADVICE): a copy or fold that
+        # covers the vector column v: a copy or fold that
         # corrupted vector values must flip the digest
         return content_digest(df, dig_cols)
 
@@ -737,7 +722,7 @@ def stream_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the documented casualty: a pre-fold as-of read needs a folded
     # delta that GC removed (ANY failure satisfies the contract —
-    # shared broad probe, r12 ADVICE)
+    # shared broad probe)
     from ..operators.segment_store import _pinned_read_fails
 
     prefold_fails = _pinned_read_fails(spark, f"{vdir}/delta_b0/postings")
@@ -766,7 +751,7 @@ def _gc_instance_dir(spark: SparkSession, sf_dir: str) -> str:
 def stream_index_retention_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """SCHEDULED retention (r12 VERDICT Next #5): the GC policy folded
+    """SCHEDULED retention: the GC policy folded
     into the per-batch maintenance loop the way compaction already is —
     each micro-batch evaluates retention against the on-disk manifest
     state and commits an atomic per-batch tally, instead of a one-shot
@@ -975,31 +960,17 @@ def _ensure_delete_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     tmp = tempfile.mkdtemp(prefix="stream_index_del_")
     try:
-        import glob
-        import os
-        import time
-
-        src = f"{tmp}/src"
-        base_ts = time.time() - 1000
-        seen: set[str] = set()
-        for k, rem in enumerate(DELETE_WAVE_REMS):
-            base_postings.filter(
-                F.col("vec_id") % DELETE_WAVE_MOD == rem
-            ).select("vec_id").coalesce(1).write.mode("append").parquet(src)
-            for f in glob.glob(f"{src}/part-*.parquet"):
-                if f not in seen:
-                    seen.add(f)
-                    os.utime(f, (base_ts + k * 10, base_ts + k * 10))
-        (
-            spark.readStream.schema("vec_id bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        src = stage_deliveries(
+            (
+                base_postings.filter(
+                    F.col("vec_id") % DELETE_WAVE_MOD == rem
+                ).select("vec_id")
+                for rem in DELETE_WAVE_REMS
+            ),
+            f"{tmp}/src",
         )
+        raw = read_file_stream(spark, src, 1, "vec_id bigint")
+        drain((raw.writeStream.foreachBatch(on_batch), f"{tmp}/ckpt"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

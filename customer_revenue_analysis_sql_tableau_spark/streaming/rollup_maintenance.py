@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.rollups import _finalize
+from ..session import drain, read_file_stream
 from .statefs import delete_dir
 from .windows import _latest_state_version, _state_versions
 
@@ -81,27 +82,14 @@ def run_streaming_minute_rollup(
     maintenance; return the finalized tier (bucket, event_type,
     n_events, value_cents, total_value, max_value) over the latest
     state version."""
-    schema = spark.read.parquet(source_dir).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    if dict(raw.dtypes).get("ts") == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         _rollup_state_batch(
             spark, state_dir, _minute_partial(batch_df).localCheckpoint(), batch_id
         )
 
-    query = (
-        raw.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    raw = read_file_stream(spark, source_dir, max_files_per_trigger=1)
+    drain((raw.writeStream.foreachBatch(process), checkpoint_dir))
     latest = _latest_state_version(spark, state_dir)
     if latest is None:
         return spark.createDataFrame(
@@ -110,6 +98,7 @@ def run_streaming_minute_rollup(
             " value_cents bigint, total_value double, max_value double",
         )
     return _finalize(spark.read.parquet(f"{state_dir}/v_{latest}"))
+
 
 def stream_minute_rollup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-contained, driver-checkable form of the streaming rollup:
@@ -120,26 +109,20 @@ def stream_minute_rollup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     row proving the streamed maintenance end-to-end, not just in
     pytest. The result is localCheckpointed so the temp state can be
     deleted before returning."""
-    import shutil
-    import tempfile
-
     from ..catalog import load_tables
+    from .drains import _drain, _stage_thirds
 
     events = load_tables(spark, sf_dir, names=("events",), register=False)[
         "events"
     ]
-    tmp = tempfile.mkdtemp(prefix="stream_rollup_drain_")
-    try:
-        for k in (0, 1, 2):
-            events.filter(F.col("event_id") % 3 == k).coalesce(1).write.mode(
-                "append"
-            ).parquet(f"{tmp}/src")
-        out = run_streaming_minute_rollup(
-            spark, f"{tmp}/src", f"{tmp}/ckpt", f"{tmp}/state"
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    def build(tmp: str) -> DataFrame:
+        src = _stage_thirds(events, F.col("event_id"), f"{tmp}/src")
+        return run_streaming_minute_rollup(
+            spark, src, f"{tmp}/ckpt", f"{tmp}/state"
+        )
+
+    return _drain(spark, build)
 
 
 QUERIES = {

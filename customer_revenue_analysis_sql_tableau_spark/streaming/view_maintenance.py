@@ -36,6 +36,7 @@ from ..operators.warehouse import (
     merge_partials,
     partial_aggregate,
 )
+from ..session import drain, read_file_stream
 from .statefs import delete_dir
 from .windows import _latest_state_version, _state_versions
 
@@ -84,22 +85,13 @@ def run_streaming_view_maintenance(
         register=False,
     )
     l, p = t["lineitem"], t["part"]
-    schema = spark.read.parquet(source_dir).schema
 
     def process(batch_o: DataFrame, batch_id: int) -> None:
         partial = partial_aggregate(batch_o, l, p).localCheckpoint()
         _view_state_batch(spark, state_dir, partial, batch_id)
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    raw = read_file_stream(spark, source_dir, max_files_per_trigger=1)
+    drain((raw.writeStream.foreachBatch(process), checkpoint_dir))
     latest = _latest_state_version(spark, state_dir)
     if latest is None:  # empty source: no batch ran — empty view frame
         empty_orders = spark.read.parquet(source_dir).limit(0)

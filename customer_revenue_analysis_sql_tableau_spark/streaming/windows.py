@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..functions.money import money
-from ..session import scoped_conf
+from ..session import drain, drain_to_frame, read_file_stream, scoped_conf
 
 #: Window geometry (pinned for the registered queries).
 TUMBLE = "10 minutes"
@@ -181,7 +181,7 @@ def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("k").alias("sum_k"),
         # null-safe: to_json drops a NULL event_type, so tag1 comes back
         # NULL and `tag1 == etype` is NULL — count it as 0, not NULL, so
-        # the oracle's count(event_type) mirrors it exactly (ADVICE r8)
+        # the oracle's count(event_type) mirrors it exactly
         F.sum(
             F.when(F.col("tag1") == F.col("etype"), F.lit(1))
             .otherwise(F.lit(0))
@@ -208,9 +208,9 @@ def run_tumbling_stream(
     than the watermark horizon would be dropped in a live multi-batch
     run; with a single availableNow batch nothing is late.
     """
-    raw = _read_events_stream(spark, source_dir)
     stream = (
-        raw.withWatermark("ts", WATERMARK)
+        read_file_stream(spark, source_dir)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", TUMBLE).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -224,31 +224,7 @@ def run_tumbling_stream(
             "total_value",
         )
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("tumbling_sink")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("tumbling_sink")
-
-
-def _read_events_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(source_dir)
-    # The parquet ts is timestamp[us] without tz → TIMESTAMP_NTZ, which
-    # withWatermark rejects; session tz is UTC so the cast is value-preserving.
-    if dict(raw.dtypes).get("ts") == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return drain_to_frame(stream, checkpoint_dir, "complete")
 
 
 #: No-data micro-batches pinned OFF for the late-data drains: a trailing
@@ -263,15 +239,14 @@ def _drain_late_windows(
     spark: SparkSession,
     source_dir: str,
     checkpoint_dir: str,
-    sink: str,
     window: Column,
     key: str,
     lead: list | None = None,
 ) -> DataFrame:
     """Count + exact value sum per (``window``, ``key``) in APPEND mode,
-    one micro-batch per source file, drained (availableNow) into the
-    memory table ``sink``. The output leads with ``lead`` (default:
-    ``window_start, window_end, key``). Returns the sink."""
+    one micro-batch per source file, drained into a memory sink. The
+    output leads with ``lead`` (default: ``window_start, window_end,
+    key``). Returns the sink."""
     if lead is None:
         lead = [
             F.col("w.start").alias("window_start"),
@@ -279,9 +254,9 @@ def _drain_late_windows(
             key,
         ]
     with scoped_conf(spark, _NO_EMPTY_BATCHES):
-        raw = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
         stream = (
-            raw.withWatermark("ts", WATERMARK)
+            read_file_stream(spark, source_dir, max_files_per_trigger=1)
+            .withWatermark("ts", WATERMARK)
             .groupBy(window.alias("w"), key)
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -289,16 +264,7 @@ def _drain_late_windows(
             )
             .select(*lead, "n_events", "total_value")
         )
-        query = (
-            stream.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(sink)
+        return drain_to_frame(stream, checkpoint_dir, "append")
 
 
 def run_late_data_stream(
@@ -331,7 +297,7 @@ def run_late_data_stream(
     No-data micro-batches are off for the run (:data:`_NO_EMPTY_BATCHES`).
     Returns the append sink contents."""
     return _drain_late_windows(
-        spark, source_dir, checkpoint_dir, "late_data_sink",
+        spark, source_dir, checkpoint_dir,
         F.window("ts", TUMBLE), "event_type",
     )
 
@@ -357,7 +323,7 @@ def run_late_session_stream(
     1-2 and keep sessions whose end <= wm, where wm =
     max(delivery-1 ts) - delay."""
     return _drain_late_windows(
-        spark, source_dir, checkpoint_dir, "late_session_sink",
+        spark, source_dir, checkpoint_dir,
         F.session_window("ts", SESSION_GAP), "user_id",
         [
             "user_id",
@@ -383,7 +349,7 @@ def run_late_sliding_stream(
     sink either way. No-data batches pinned off (same reasoning as the
     tumbling drain)."""
     return _drain_late_windows(
-        spark, source_dir, checkpoint_dir, "late_sliding_sink",
+        spark, source_dir, checkpoint_dir,
         F.window("ts", SLIDE_DURATION, SLIDE_STEP), "event_type",
     )
 
@@ -401,21 +367,12 @@ def run_dedup_stream(
     which pins the deterministic (ts, event_id)-first variant.
     """
     stream = (
-        _read_events_stream(spark, source_dir)
+        read_file_stream(spark, source_dir)
         .withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("dedup_sink")
+    return drain_to_frame(stream, checkpoint_dir, "append")
 
 
 def run_crossbatch_dedup_stream(
@@ -442,21 +399,12 @@ def run_crossbatch_dedup_stream(
     among same-key rows) is removed and the cross-batch engine rules
     above are the entire behavior."""
     stream = (
-        _read_events_stream(spark, source_dir, max_files_per_trigger=1)
+        read_file_stream(spark, source_dir, max_files_per_trigger=1)
         .withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("event_id", "ts", "user_id", "event_type", "value")
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("crossbatch_dedup_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("crossbatch_dedup_sink")
+    return drain_to_frame(stream, checkpoint_dir, "append")
 
 
 def run_sliding_stream(
@@ -465,7 +413,7 @@ def run_sliding_stream(
     """Sliding windows (10 min / 5 min step) as a true stream, complete
     mode, availableNow drain; must equal `events_sliding_counts`."""
     stream = (
-        _read_events_stream(spark, source_dir)
+        read_file_stream(spark, source_dir)
         .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", SLIDE_DURATION, SLIDE_STEP).alias("w"))
         .agg(
@@ -479,16 +427,7 @@ def run_sliding_stream(
             "total_value",
         )
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("sliding_sink")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("sliding_sink")
+    return drain_to_frame(stream, checkpoint_dir, "complete")
 
 
 def run_session_stream(
@@ -500,7 +439,7 @@ def run_session_stream(
     Must equal the batch twin (`events_session_windows`) when the whole
     source drains in one pass — asserted in pytest."""
     stream = (
-        _read_events_stream(spark, source_dir)
+        read_file_stream(spark, source_dir)
         .withWatermark("ts", WATERMARK)
         .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(
@@ -515,17 +454,9 @@ def run_session_stream(
             "total_value",
         )
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("session_sink")
-        .outputMode("complete")  # session windows reject update mode;
-        # append would hold back sessions newer than the watermark
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("session_sink")
+    # session windows reject update mode; append would hold back
+    # sessions newer than the watermark
+    return drain_to_frame(stream, checkpoint_dir, "complete")
 
 
 def run_stateful_user_counts(
@@ -556,7 +487,7 @@ def run_stateful_user_counts(
         )
 
     stream = (
-        _read_events_stream(spark, source_dir)
+        read_file_stream(spark, source_dir)
         .select("user_id", "ts", "value")
         .withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -568,18 +499,9 @@ def run_stateful_user_counts(
             GroupStateTimeout.NoTimeout,
         )
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("stateful_sink")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     # update-mode memory sink appends one row per (user, batch); the
     # final state per user is the max cumulative count.
-    sink = spark.table("stateful_sink")
+    sink = drain_to_frame(stream, checkpoint_dir, "update")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         sink.withColumn("rn", F.row_number().over(w))
@@ -627,7 +549,7 @@ def run_latest_state_stream(
         )
 
     stream = (
-        _read_events_stream(spark, source_dir)
+        read_file_stream(spark, source_dir)
         .select("user_id", "ts", "event_id", "event_type", "value")
         .withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -640,16 +562,7 @@ def run_latest_state_stream(
             GroupStateTimeout.NoTimeout,
         )
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("latest_state_sink")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    sink = spark.table("latest_state_sink")
+    sink = drain_to_frame(stream, checkpoint_dir, "update")
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts_us"), F.desc("event_id")
     )
@@ -666,6 +579,39 @@ def run_latest_state_stream(
     )
 
 
+def _interval_join(
+    spark: SparkSession,
+    source_dir: str,
+    how: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """Watermarked ``how`` join of the stream's error events to the
+    same user's clicks from the preceding 10 minutes. Columns: error
+    side ``error_id, e_user_id, error_ts``; click side ``click_id,
+    c_user_id, click_ts``."""
+
+    def side(event_type: str, user: str) -> DataFrame:
+        return (
+            read_file_stream(spark, source_dir, max_files_per_trigger)
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(f"{event_type}_id"),
+                F.col("user_id").alias(user),
+                F.col("ts").alias(f"{event_type}_ts"),
+            )
+            .withWatermark(f"{event_type}_ts", WATERMARK)
+        )
+
+    return side("error", "e_user_id").join(
+        side("click", "c_user_id"),
+        F.expr(
+            "e_user_id = c_user_id AND click_ts <= error_ts"
+            " AND click_ts >= error_ts - INTERVAL 10 MINUTES"
+        ),
+        how,
+    )
+
+
 def run_interval_join_stream(
     spark: SparkSession, source_dir: str, checkpoint_dir: str
 ) -> DataFrame:
@@ -678,43 +624,10 @@ def run_interval_join_stream(
     length). Inner join: append mode, exact pair semantics; pytest
     asserts set equality with the batch inequality join.
     """
-    src = _read_events_stream(spark, source_dir)
-    errors = (
-        src.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", WATERMARK)
+    joined = _interval_join(spark, source_dir, "inner", None).select(
+        "error_id", "e_user_id", "error_ts", "click_id", "click_ts"
     )
-    clicks = (
-        _read_events_stream(spark, source_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK)
-    )
-    joined = errors.join(
-        clicks,
-        F.expr(
-            "e_user_id = c_user_id AND click_ts <= error_ts"
-            " AND click_ts >= error_ts - INTERVAL 10 MINUTES"
-        ),
-    ).select("error_id", "e_user_id", "error_ts", "click_id", "click_ts")
-    query = (
-        joined.writeStream.format("memory")
-        .queryName("interval_join_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("interval_join_sink")
+    return drain_to_frame(joined, checkpoint_dir, "append")
 
 
 def run_interval_left_join_stream(
@@ -751,44 +664,10 @@ def run_interval_left_join_stream(
       oracle reconstruct the sink relationally.
 
     Inner-join twin: :func:`run_interval_join_stream`."""
-    src = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-    errors = (
-        src.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", WATERMARK)
+    joined = _interval_join(spark, source_dir, "leftOuter", 1).select(
+        "error_id", "e_user_id", "error_ts", "click_id", "click_ts"
     )
-    clicks = (
-        _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK)
-    )
-    joined = errors.join(
-        clicks,
-        F.expr(
-            "e_user_id = c_user_id AND click_ts <= error_ts"
-            " AND click_ts >= error_ts - INTERVAL 10 MINUTES"
-        ),
-        "leftOuter",
-    ).select("error_id", "e_user_id", "error_ts", "click_id", "click_ts")
-    query = (
-        joined.writeStream.format("memory")
-        .queryName("interval_left_join_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("interval_left_join_sink")
+    return drain_to_frame(joined, checkpoint_dir, "append")
 
 
 def run_interval_full_join_stream(
@@ -803,44 +682,10 @@ def run_interval_full_join_stream(
     click emits its null row iff ``click_ts + 10min < evict_wm``
     (a click at exactly the boundary stays in state). Output keeps the
     id/ts pairs only — either side may be null, never both."""
-    src = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-    errors = (
-        src.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", WATERMARK)
+    joined = _interval_join(spark, source_dir, "fullOuter", 1).select(
+        "error_id", "error_ts", "click_id", "click_ts"
     )
-    clicks = (
-        _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK)
-    )
-    joined = errors.join(
-        clicks,
-        F.expr(
-            "e_user_id = c_user_id AND click_ts <= error_ts"
-            " AND click_ts >= error_ts - INTERVAL 10 MINUTES"
-        ),
-        "fullOuter",
-    ).select("error_id", "error_ts", "click_id", "click_ts")
-    query = (
-        joined.writeStream.format("memory")
-        .queryName("interval_full_join_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("interval_full_join_sink")
+    return drain_to_frame(joined, checkpoint_dir, "append")
 
 
 def run_interval_right_join_stream(
@@ -848,7 +693,7 @@ def run_interval_right_join_stream(
 ) -> DataFrame:
     """RIGHT-OUTER stream-stream interval join — the mirror of
     :func:`run_interval_left_join_stream` that completes the join-type
-    matrix symmetrically (r9 VERDICT Next #6): every click event, with
+    matrix symmetrically: every click event, with
     its matching errors when they exist and NULL error columns once
     the watermark proves no match can arrive. The state-side roles
     flip: the CLICK side is now the null-gated side, and its eviction
@@ -858,44 +703,10 @@ def run_interval_right_join_stream(
     join, where the click branch obeyed the same rule). Matched-pair
     admission is unchanged: both rows admitted at their arrival
     batches under the two-batch-lagged min-of-sides watermark."""
-    src = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-    errors = (
-        src.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", WATERMARK)
+    joined = _interval_join(spark, source_dir, "rightOuter", 1).select(
+        "error_id", "error_ts", "click_id", "c_user_id", "click_ts"
     )
-    clicks = (
-        _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK)
-    )
-    joined = errors.join(
-        clicks,
-        F.expr(
-            "e_user_id = c_user_id AND click_ts <= error_ts"
-            " AND click_ts >= error_ts - INTERVAL 10 MINUTES"
-        ),
-        "rightOuter",
-    ).select("error_id", "error_ts", "click_id", "c_user_id", "click_ts")
-    query = (
-        joined.writeStream.format("memory")
-        .queryName("interval_right_join_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("interval_right_join_sink")
+    return drain_to_frame(joined, checkpoint_dir, "append")
 
 
 #: Inactivity gap for the timeout-sessionization operator (well under
@@ -980,7 +791,7 @@ def run_stateful_timeout_sessions(
         yield  # unreachable: keeps the function a generator
 
     stream = (
-        _read_events_stream(spark, source_dir, max_files_per_trigger=1)
+        read_file_stream(spark, source_dir, max_files_per_trigger=1)
         .select("user_id", "ts", "value")
         .withWatermark("ts", WATERMARK)
         .groupBy("user_id")
@@ -992,16 +803,7 @@ def run_stateful_timeout_sessions(
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    query = (
-        stream.writeStream.format("memory")
-        .queryName("timeout_sessions_sink")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("timeout_sessions_sink").select(
+    return drain_to_frame(stream, checkpoint_dir, "update").select(
         "user_id",
         "n_events",
         "total_cents",
@@ -1015,50 +817,17 @@ def run_interval_join_multibatch_stream(
     """The inner interval join with ``maxFilesPerTrigger=1`` — each
     staged delivery is a REAL micro-batch. (Without the option the
     file source drains every available file in ONE availableNow batch
-    — probed r9; the r7 drain's "cross-batch retention" reading was a
-    single-batch artifact. With clicks staged in batch 1 and errors in
-    batch 2, every emitted pair now genuinely crosses a batch
-    boundary through click state, and the errors-side tracker stays at
+    — probed — so no state would cross a batch boundary at all. With
+    clicks staged in batch 1 and errors in batch 2, every emitted pair
+    genuinely crosses a batch boundary through click state, and the
+    errors-side tracker stays at
     zero through batch 1 — no data — so the global min-of-sides
     watermark admits everything and the complete-join oracle is
     exact.)"""
-    src = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-    errors = (
-        src.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", WATERMARK)
+    joined = _interval_join(spark, source_dir, "inner", 1).select(
+        "error_id", "e_user_id", "error_ts", "click_id", "click_ts"
     )
-    clicks = (
-        _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK)
-    )
-    joined = errors.join(
-        clicks,
-        F.expr(
-            "e_user_id = c_user_id AND click_ts <= error_ts"
-            " AND click_ts >= error_ts - INTERVAL 10 MINUTES"
-        ),
-    ).select("error_id", "e_user_id", "error_ts", "click_id", "click_ts")
-    query = (
-        joined.writeStream.format("memory")
-        .queryName("interval_join_mb_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("interval_join_mb_sink")
+    return drain_to_frame(joined, checkpoint_dir, "append")
 
 
 def run_interval_semi_join_stream(
@@ -1074,44 +843,10 @@ def run_interval_semi_join_stream(
     pytest (tests/test_extensions.py), while the drain hash covers the
     admission rules on the fixture (the probed dual-watermark rules
     documented on :func:`run_interval_left_join_stream`)."""
-    src = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-    errors = (
-        src.filter(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("e_user_id"),
-            F.col("ts").alias("error_ts"),
-        )
-        .withWatermark("error_ts", WATERMARK)
+    joined = _interval_join(spark, source_dir, "leftSemi", 1).select(
+        "error_id", "e_user_id", "error_ts"
     )
-    clicks = (
-        _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK)
-    )
-    joined = errors.join(
-        clicks,
-        F.expr(
-            "e_user_id = c_user_id AND click_ts <= error_ts"
-            " AND click_ts >= error_ts - INTERVAL 10 MINUTES"
-        ),
-        "leftSemi",
-    ).select("error_id", "e_user_id", "error_ts")
-    query = (
-        joined.writeStream.format("memory")
-        .queryName("interval_semi_join_sink")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table("interval_semi_join_sink")
+    return drain_to_frame(joined, checkpoint_dir, "append")
 
 
 def run_static_enrich_stream(
@@ -1132,20 +867,14 @@ def run_static_enrich_stream(
     micro-batches; the parquet file sink's ``_spark_metadata`` log
     keeps the output exactly-once (same contract as
     :func:`run_resumable_stream`)."""
-    src = _read_events_stream(spark, source_dir, max_files_per_trigger=1)
+    src = read_file_stream(spark, source_dir, max_files_per_trigger=1)
     enriched = src.join(
         F.broadcast(dim), src["user_id"] == dim["c_custkey"], "left"
     ).select(
         "event_id", "user_id", "event_type", "ts", "value", "c_mktsegment"
     )
-    query = (
-        enriched.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    sink = enriched.writeStream.format("parquet").option("path", sink_dir)
+    drain((sink, checkpoint_dir))
     return spark.read.parquet(sink_dir)
 
 
@@ -1167,21 +896,15 @@ def run_resumable_stream(
     Returns the sink as a batch frame (the read honors the manifest, so
     orphaned files from killed batches are invisible).
     """
-    enriched = _read_events_stream(spark, source_dir).select(
+    enriched = read_file_stream(spark, source_dir).select(
         "event_id",
         "user_id",
         "event_type",
         "ts",
         F.round(money("value") * 2, 2).cast("double").alias("double_value"),
     )
-    query = (
-        enriched.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    sink = enriched.writeStream.format("parquet").option("path", sink_dir)
+    drain((sink, checkpoint_dir))
     return spark.read.parquet(sink_dir)
 
 
@@ -1221,25 +944,11 @@ def run_foreach_batch_upsert_stream(
     Versions older than the predecessor are pruned (the predecessor
     itself is kept — a retry of the current batch still reads it).
     """
-    schema = spark.read.parquet(source_dir).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    if dict(raw.dtypes).get("ts") == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         _upsert_batch(spark, state_dir, batch_df, batch_id)
 
-    query = (
-        raw.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    raw = read_file_stream(spark, source_dir, max_files_per_trigger=1)
+    drain((raw.writeStream.foreachBatch(upsert), checkpoint_dir))
     latest = _latest_state_version(spark, state_dir)
     if latest is None:  # empty source: no batch ran
         return spark.createDataFrame(
@@ -1289,9 +998,9 @@ def _upsert_batch(
     versions = _state_versions(spark, state_dir)
     prev = max((v for v in versions if v < batch_id), default=None)
     if prev is not None:
-        # declared schema (guide §6.2, r15 segment-store pattern): the
-        # state dir is written by THIS function, so its schema is the
-        # partial frame's own — no per-batch footer inference
+        # declared schema: the state dir is written by THIS function,
+        # so its schema is the partial frame's own — no per-batch
+        # footer inference
         merged = (
             spark.read.schema(part.schema)
             .parquet(f"{state_dir}/v_{prev}")

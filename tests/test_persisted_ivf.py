@@ -49,7 +49,7 @@ def test_read_path_never_trains(built_index, spark, sf_dir, monkeypatch):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     # the scans must come from the persisted index directory
-    assert "ivf_index_" in plan
+    assert any("ivf_index_" in f for f in df.inputFiles())
     assert df.count() > 0
 
 
@@ -83,7 +83,8 @@ def test_persisted_delete_read_path_never_trains(
     df = sim.sim_persisted_delete_ivf_topk(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "delete_delta" in plan  # reads the compacted segments
+    # reads the compacted segments
+    assert any("delete_delta" in f for f in df.inputFiles())
     assert df.count() > 0
 
 
@@ -122,7 +123,8 @@ def test_persisted_delivery_read_path_never_trains(
     df = sim.sim_persisted_delivery_topk(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "insert_delta" in plan  # queries come from the delta segment
+    # queries come from the delta segment
+    assert any("insert_delta" in f for f in df.inputFiles())
     assert df.count() > 0
 
 

@@ -346,3 +346,31 @@ def test_manifest_writes_stage_only_through_stage_and_land():
     ]
     assert not offenders, f"staging outside stage_and_land: {offenders}"
     assert owner.read_text().count("F.input_file_name(") == 1
+
+
+def test_streams_start_only_through_session_drain():
+    """Streams start only through ``session.drain`` (every query stopped
+    on exit, also when a sibling fails), memory sinks are named only by
+    ``session.drain_to_frame`` (a fresh name per call, view dropped on
+    return), deliveries are mtime-stamped only by
+    ``session.stage_deliveries``, and the file-stream schema is inferred
+    in one place."""
+    pkg = Path(__file__).resolve().parents[1] / "customer_revenue_analysis_sql_tableau_spark"
+    owner = pkg / "session.py"
+    owned = (
+        "trigger(availableNow=True)", ".awaitTermination(", ".queryName(", "os.utime("
+    )
+    offenders = [
+        f"{p.relative_to(pkg)}:{i}: {tok}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != owner
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        for tok in owned
+        if tok in line
+    ]
+    assert not offenders, f"stream started or staged outside session.py: {offenders}"
+    inferred = sum(
+        p.read_text().count("read.parquet(source_dir).schema")
+        for p in pkg.rglob("*.py")
+    )
+    assert inferred <= 1

@@ -12,8 +12,8 @@ from customer_revenue_analysis_sql_tableau_spark.functions.money import money
 from customer_revenue_analysis_sql_tableau_spark.streaming.drains import (
     stream_static_enrich_drain,
 )
+from customer_revenue_analysis_sql_tableau_spark.session import read_file_stream
 from customer_revenue_analysis_sql_tableau_spark.streaming.windows import (
-    _read_events_stream,
     run_static_enrich_stream,
 )
 
@@ -27,7 +27,7 @@ def test_streaming_plan_contains_broadcast_join(spark, sf_dir):
     dim = t["customer"].select("c_custkey", "c_mktsegment")
     with tempfile.TemporaryDirectory() as tmp:
         t["events"].limit(10).coalesce(1).write.parquet(f"{tmp}/src")
-        src = _read_events_stream(spark, f"{tmp}/src")
+        src = read_file_stream(spark, f"{tmp}/src")
         enriched = src.join(
             F.broadcast(dim), src["user_id"] == dim["c_custkey"], "left"
         )

@@ -82,39 +82,19 @@ _REGISTRY_MODULES = [
     _multi_writer,
 ]
 
-# The driver's correctness run is budgeted (~50 entries per round) and
+# The external correctness run is budgeted (~50 entries per run) and
 # walks the merged dict in insertion order, so the registry is ordered
-# at ENTRY level. Round-15 ordering (VERDICT.md r14, Next #1-#6):
-# (1) the documented THREE-entry r14 budget spill FIRST (r14 Next #4 —
-# spills sweep before anything else, so the r8 floor finally clears);
-# (2) the TEN new r15 entries, first driver proof — the SQL DML
-# front-end driving MERGE INTO on the identical merge oracle plus the
-# five-verb lifecycle and a mid-chain VERSION AS OF read (r14 Next
-# #1/#2), and the two CONCURRENT streaming MERGE writers racing
-# through commit_transaction with engineered abort + rebase markers
-# (r14 Next #6), and the 4:2:0 chroma-subsampled JPEG decode (r14
-# Next #8);
-# (3) the entries whose code paths CHANGED this round (r14 ADVICE
-# fixes: commit_transaction now carries schema/stats, delete_where is
-# NULL-safe and per-writer-staged, the CDF stream source partitions
-# by key-range overlap component, the row stream source enforces
-# append-only, the pruned read returns empty frames) — re-proven
-# locally at sf0.001/0.01 this round, re-proven by the driver here;
-# (4) dedup_components_distributed pulled ahead of its cohort (r14
-# Next #5: the driver proves the 100 TB min-label path, not the
-# driver-side union-find twin);
-# (5) the r9 proof-staleness cohort (oldest first in the registry-wide
-# floor sweep). 3+10+5+1+44 = 63 overfills the ~50 budget; the tail is
-# code-unchanged and pytest-covered, so the <=8-entry spill costs
-# nothing (documented rule; spills sweep first in r16). Guarded
-# against rot by tests/test_registry_hygiene.py::
-# test_priority_names_exist.
+# at ENTRY level: entries a previous budget spilled come first, then
+# new entries and entries whose code paths changed, then the cohort
+# whose last external proof is oldest. Everything not listed follows in
+# module order. Guarded against rot by
+# tests/test_registry_hygiene.py::test_priority_names_exist.
 _PRIORITY = [
-    # -- the r14 spill: sweep first (r14 Next #4) --
+    # -- spilled by the previous budget: sweep first --
     "temporal_scd2_user_state",
     "view_customer_value_summary_bucketed",
     "vocab_topk_containment_check",
-    # -- new this round (r15), first driver proof --
+    # -- new entries, first external proof --
     "manifest_sql_merge_upsert",  # MERGE INTO statement, identical oracle
     "manifest_sql_lifecycle_history",  # 5-verb lifecycle via SQL strings
     "manifest_sql_time_travel",  # mid-chain VERSION AS OF read
@@ -124,16 +104,16 @@ _PRIORITY = [
     "manifest_sql_check_constraint",  # CHECK constraints enforced on writes
     "manifest_sql_ctas",  # CREATE TABLE AS SELECT + OR REPLACE swap
     "stream_manifest_two_writers",  # concurrent writers + abort/rebase
-    "multimodal_decode_jpeg_420",  # chroma-subsampled decode (Next #8)
-    # -- changed-in-r15 code paths (r14 ADVICE fixes), re-proven --
+    "multimodal_decode_jpeg_420",  # chroma-subsampled decode
+    # -- changed code paths, re-proven --
     "parquet_manifest_history",  # delete_where/commit_transaction changed
     "parquet_manifest_conflict_detect",  # commit_transaction metadata carry
     "parquet_manifest_stats_pruned_read",  # empty-eligible short-circuit
     "stream_manifest_source_drain",  # append-only contract enforced
     "stream_manifest_cdf_drain",  # overlap-component partitioning
-    # -- r14 Next #5: the distributed components path, driver-proven --
+    # -- the distributed components path, proven externally --
     "dedup_components_distributed",
-    # -- the r9 proof-staleness cohort (registry floor sweep) --
+    # -- the oldest-proof cohort (registry floor sweep) --
     "analytics_funnel_stage_counts",
     "analytics_retention_day_cohorts",
     "corpus_stats_report",

@@ -21,9 +21,9 @@ the lifecycle tail on top of those artifacts:
   head-reader answers are bit-unchanged, (b) only unreferenced
   directories were removed, (c) a reader pinned to an expired version
   is the documented casualty.
-- **Windowed VACUUM** (:func:`sim_persisted_vacuum_window`, r12 VERDICT
-  Next #3): the same pass at retention 2 over a DEEPER chain in which a
-  compaction rewrote a delta — so the window genuinely splits history:
+- **Windowed VACUUM** (:func:`sim_persisted_vacuum_window`): the same
+  pass at retention 2 over a DEEPER chain in which a compaction
+  rewrote a delta — so the window genuinely splits history:
   the intermediate retained version stays readable as-of with its exact
   pre-delete digest, only the segment no retained version references
   expires, and both casualty modes fire (pinned file read AND expired
@@ -69,6 +69,7 @@ from .similarity import (
     N_QUERIES,
     TOP_K,
     _ivf_index_dir,
+    brute_topk_over_live,
     sim_persisted_concurrent_ingest,
 )
 
@@ -79,7 +80,6 @@ __all__ = [
     "sim_asof_v2_brute_topk",
     "sim_persisted_vacuum",
     "sim_persisted_vacuum_window",
-    "brute_topk_over_live",
 ]
 
 #: VACUUM retention: keep segments referenced by this many newest
@@ -100,7 +100,7 @@ _VAC_DIGEST_COLS = ("vec_id", "cell", "v")
 #: protocol writes exactly this; ``cell`` is the partition column).
 #: Declared so readers skip per-relation schema inference — at sf0.1
 #: each segment dir holds ~100 KB-sized files and the footer-sampling
-#: pass cost ~90 ms of driver latency per relation per read (r15).
+#: pass costs ~90 ms of driver latency per relation per read.
 _POSTINGS_SCHEMA = "vec_id bigint, v array<double>, cell int"
 
 
@@ -157,7 +157,7 @@ def _validated_full_chain(
     expected version present and earlier versions' segment sets nested
     in the head — a torn/partial chain raises the same descriptive
     ``ValueError`` contract as :func:`read_index_asof`, never a bare
-    ``KeyError`` (r12 ADVICE)."""
+    ``KeyError``."""
     d, chain = _manifest_chain(spark, sf_dir)
     missing = [v for v in (1, 2, 3) if v not in chain]
     if missing:
@@ -219,40 +219,12 @@ def sim_persisted_read_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def brute_topk_over_live(live: DataFrame) -> DataFrame:
-    """Exact cosine top-k tail shared by every as-of CHECK baseline
-    (batch chain and streamed twin): bounded broadcast query set
-    (``vec_id < N_QUERIES`` of the live snapshot), JVM fold dot
-    product, per-query window top-k with the deterministic
-    (cosine DESC, neighbor ASC) tie-break. Deliberately a non-scale
-    plan — the cost of an exactness PROOF, never a production path
-    (allowlisted as such in tools/registry_plan_scan.py)."""
-    from pyspark.sql import Window
-
-    from .dedup import _cos
-
-    q = live.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        live.withColumnRenamed("vec_id", "neighbor_id")
-        .join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _cos("qv", "v").alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def sim_asof_v2_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel as a QUERY surface, not just an audit: exact cosine
     top-k against the AS-OF-v2 snapshot (base + writer A's wave — the
     corpus a reader saw before writer B's commit). The live set comes
     from :func:`read_index_asof`; the tail is the shared brute-force
-    shape (:func:`brute_topk_over_live`), so the whole historical
+    shape (``similarity.brute_topk_over_live``), so the whole historical
     answer is hash-green against DuckDB's brute force over the same
     membership predicate. The reproducible-training-snapshot story:
     any committed version's exact search results can be regenerated
@@ -321,9 +293,8 @@ def _run_retention(
 def _pinned_read_fails(spark: SparkSession, path: str) -> bool:
     """The documented casualty probe: ANY failure of the pinned read
     satisfies the contract clause — catch broadly, not just
-    ``AnalysisException`` (r12 ADVICE: a different exception class from
-    a future Spark version must flip the boolean, not abort the
-    entry)."""
+    ``AnalysisException``: a different exception class from a future
+    Spark version must flip the boolean, not abort the entry."""
     try:
         spark.read.parquet(path).limit(1).collect()
         return False
@@ -332,7 +303,7 @@ def _pinned_read_fails(spark: SparkSession, path: str) -> bool:
 
 
 def sim_persisted_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GC/VACUUM with a retention window (r11 VERDICT Next #3). Stages
+    """GC/VACUUM with a retention window. Stages
     a copy-on-write segment universe (base + both delta waves copied
     from the concurrent-ingest artifacts), replays the 4-version
     manifest history ending in a compaction commit that retires the
@@ -471,7 +442,7 @@ def read_vacuum2_asof(
 def sim_persisted_vacuum_window(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Multi-version retention (r12 VERDICT Next #3): VACUUM with
+    """Multi-version retention: VACUUM with
     ``retain = 2`` over a 4-version chain where a compaction rewrote
     writer A's delta (v3: ``seg_w1`` → ``seg_m1``, identical rows).
     Retained = {v3, v4}; their reference closure is {base, m1, w2}, so

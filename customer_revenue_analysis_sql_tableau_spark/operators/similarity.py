@@ -47,30 +47,54 @@ LSH_BANDS = 8
 LSH_SEED = 42
 
 
-def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × full scan + window top-k."""
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``embeddings`` as ``(vec_id, v array<double>)``, the frame every
+    tier searches."""
     e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    q = ed.filter(F.col("vec_id") < N_QUERIES).select(
+    return e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+
+
+def _queries(vectors: DataFrame) -> DataFrame:
+    """The bounded query set (``vec_id < N_QUERIES``) of a
+    ``(vec_id, v)`` frame as ``(query_id, qv)``."""
+    return vectors.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    scored = (
-        F.broadcast(q)
-        .join(ed, F.col("query_id") != F.col("vec_id"))
+
+
+def _rank_top_k(scored: DataFrame) -> DataFrame:
+    """The one top-k tail: per query, the ``TOP_K`` best
+    ``(query_id, neighbor_id, cosine)`` rows under the deterministic
+    (cosine DESC, neighbor_id ASC) tie order the oracles use."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
+def brute_topk_over_live(live: DataFrame) -> DataFrame:
+    """Exact cosine top-k over a ``(vec_id, v)`` snapshot: the broadcast
+    bounded query set × every live vector, JVM fold dot product
+    (bit-identical to DuckDB's ``list_dot_product``), then
+    :func:`_rank_top_k`. O(Q·N): the exactness baseline of every tier,
+    never a production path (allowlisted as such in
+    tools/registry_plan_scan.py)."""
+    return _rank_top_k(
+        F.broadcast(_queries(live))
+        .join(live, F.col("query_id") != F.col("vec_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             _cos("qv", "v").alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+
+
+def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k: broadcast queries × full scan + window top-k."""
+    return brute_topk_over_live(_vectors(spark, sf_dir))
 
 
 def _hyperplanes() -> np.ndarray:
@@ -100,10 +124,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             out |= bits[:, i].astype(np.int32) << i
         return pd.Series(out)
 
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).withColumn("sig", signature(F.col("v")))
+    ed = _vectors(spark, sf_dir).withColumn("sig", signature(F.col("v")))
     bits_per_band = LSH_PLANES // LSH_BANDS
     mask = (1 << bits_per_band) - 1
     bands = F.array(
@@ -136,14 +157,8 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "qv", F.col("vec_id").alias("neighbor_id"), "v")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
+    return _rank_top_k(
         cand.select("query_id", "neighbor_id", _cos("qv", "v").alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -174,27 +189,135 @@ def _ivf_geometry(n_sample: int) -> tuple[int, int]:
     return nlist, nprobe
 
 
+def _nearest(m: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Row index of each vector's nearest centroid — the one argmin
+    every quantizer (coarse cells, PQ subspace codes) trains and
+    assigns with. Distances use the matmul identity
+    ‖x−c‖² = ‖x‖² − 2x·c + ‖c‖² rather than the broadcast-subtract
+    form: the same argmin (pinned by the numpy-only quantizer test in
+    tests/test_extensions.py), 29× faster and O(n·k) memory instead
+    of the O(n·k·dim) intermediate (2.06 s → 0.07 s at the 4096×64×64
+    training shape). The evaluation order is part of the contract:
+    persisted artifacts and in-process tiers agree bit-for-bit only
+    while every caller computes the same floats."""
+    d2 = (
+        (m**2).sum(axis=1)[:, None]
+        - 2.0 * (m @ cents.T)
+        + (cents**2).sum(axis=1)[None, :]
+    )
+    return d2.argmin(axis=1)
+
+
 def _train_centroids(vectors: np.ndarray, nlist: int) -> np.ndarray:
     """Seeded Lloyd iterations on a driver-side sample (numpy). This is
     how IVF quantizers are trained at any scale — FAISS trains on a
-    bounded sample too; only the assignment pass must be distributed.
-    Distances use the matmul identity ‖x−c‖² = ‖x‖² − 2x·c + ‖c‖²
-    rather than the broadcast-subtract form: same argmin (bit-identical
-    centroids on this corpus, probed), 29× faster and O(n·k) memory
-    instead of the O(n·k·dim) intermediate (2.06 s → 0.07 s at the
-    4096×64×64 training shape)."""
+    bounded sample too; only the assignment pass must be distributed."""
     rng = np.random.default_rng(LSH_SEED)
     init = rng.choice(len(vectors), size=nlist, replace=False)
     cents = vectors[np.sort(init)].copy()
-    vn = (vectors**2).sum(axis=1)[:, None]
     for _ in range(IVF_TRAIN_ITERS):
-        d2 = vn - 2.0 * (vectors @ cents.T) + (cents**2).sum(axis=1)[None, :]
-        cells = d2.argmin(axis=1)
+        cells = _nearest(vectors, cents)
         for c in range(nlist):
             members = vectors[cells == c]
             if len(members):
                 cents[c] = members.mean(axis=0)
     return cents
+
+
+def _train_sample(vectors: DataFrame) -> np.ndarray:
+    """The quantizers' training sample: the first ``IVF_TRAIN_SAMPLE``
+    vectors in seeded-hash order, collected to the driver. orderBy +
+    limit compiles to TakeOrderedAndProject (per-partition heads +
+    merge), never a full sort — safe at any corpus size."""
+    rows = (
+        vectors.orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED)))
+        .limit(IVF_TRAIN_SAMPLE)
+        .collect()
+    )
+    return np.array([r["v"] for r in rows])
+
+
+def _train_ivf(sample: np.ndarray) -> tuple[np.ndarray, int, int]:
+    """Coarse quantizer for a training sample: ``(centroids, nlist,
+    nprobe)``."""
+    nlist, nprobe = _ivf_geometry(len(sample))
+    return _train_centroids(sample, nlist), nlist, nprobe
+
+
+def _assign_cells(vectors: DataFrame, cents: np.ndarray) -> DataFrame:
+    """``vectors`` plus ``cell``, its nearest centroid, from one
+    vectorized Arrow ``pandas_udf``: the centroids ride the UDF closure
+    (nlist × dim floats — broadcast-sized at any corpus scale), cells
+    come from one numpy matmul per batch. No shuffle, no giant
+    centroid-literal tree for the analyzer to chew per plan copy."""
+
+    @pandas_udf("int")
+    def cell_of(vs: pd.Series) -> pd.Series:
+        return pd.Series(_nearest(np.stack(vs.to_numpy()), cents).astype(np.int32))
+
+    return vectors.withColumn("cell", cell_of(F.col("v")))
+
+
+def _centroid_frame(spark: SparkSession, cents: np.ndarray) -> DataFrame:
+    """Centroids as ``(cell, cv)`` rows: the probe's broadcast side and
+    the persisted ``centroids`` artifact."""
+    return spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
+        "cell int, cv array<double>",
+    )
+
+
+def _read_centroids(spark: SparkSession, d: str) -> np.ndarray:
+    """Persisted ``centroids`` back as the (nlist, dim) ndarray;
+    float64 round-trips parquet exactly, so assignments against the
+    read-back copy equal those against the trained one."""
+    rows = spark.read.parquet(f"{d}/centroids").orderBy("cell").collect()
+    return np.array([r["cv"] for r in rows])
+
+
+def _probe_and_rank(
+    cent_df: DataFrame,
+    nprobe: int,
+    queries: DataFrame,
+    postings: DataFrame,
+    pending: DataFrame | None = None,
+    self_exclude: bool = True,
+) -> DataFrame:
+    """The one IVF probe and tail, shared by the in-process and
+    persisted tiers: rank the broadcast centroids per query (JVM HOF
+    ℓ², bounded fan-out), take candidates from the probed cells of
+    ``postings`` (equi-join on cell — with the small probed side
+    broadcast, dynamic partition pruning skips unprobed cells' files),
+    optionally drop each query itself (``self_exclude``) and mask
+    ``pending`` tombstones with a broadcast anti-join, exact-cosine
+    re-rank to top-k. Entirely JVM-side: no training, no Python
+    eval."""
+    l2 = F.aggregate(
+        F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    wq = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
+    probed = (
+        queries.crossJoin(F.broadcast(cent_df))
+        .withColumn("d2", l2)
+        .withColumn("prn", F.row_number().over(wq))
+        .filter(F.col("prn") <= nprobe)
+        .select("query_id", "qv", "cell")
+    )
+    cond = probed.cell == postings.cell
+    if self_exclude:
+        cond = cond & (F.col("query_id") != postings.vec_id)
+    cand = probed.join(postings, cond)
+    if pending is not None:
+        cand = cand.join(F.broadcast(pending), "vec_id", "left_anti")
+    return _rank_top_k(
+        cand.select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            _cos("qv", "v").alias("cosine"),
+        )
+    )
 
 
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,64 +335,10 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~N·nprobe/nlist. Like LSH, recall < 1 by construction → rows-only
     oracle; pytest checks recall against the brute-force baseline.
     """
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    # deterministic bounded sample: hash-ordered first-N. orderBy+limit
-    # compiles to TakeOrderedAndProject (per-partition heads + merge),
-    # never a full sort — safe at any corpus size.
-    sample_rows = (
-        ed.select("vec_id", "v")
-        .orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED)))
-        .limit(IVF_TRAIN_SAMPLE)
-        .collect()
-    )
-    nlist, nprobe = _ivf_geometry(len(sample_rows))
-    cents = _train_centroids(np.array([r["v"] for r in sample_rows]), nlist)
-
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, cv array<double>",
-    )
-
-    # vectorized Arrow assignment: centroids ride the UDF closure
-    # (nlist × dim floats — broadcast-sized at any corpus scale), cells
-    # come from one numpy matmul per batch. No shuffle, no giant
-    # centroid-literal tree for the analyzer to chew per plan copy.
-    cmat = cents
-    cnorm = (cmat**2).sum(axis=1)
-
-    @pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy())
-        d2 = (m**2).sum(axis=1)[:, None] - 2.0 * (m @ cmat.T) + cnorm[None, :]
-        return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
-    assigned = ed.withColumn("cell", cell_of(F.col("v")))
-
-    l2 = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probed = (
-        ed.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-        .crossJoin(F.broadcast(cent_df))
-        .withColumn("d2", l2)
-        .withColumn("prn", F.row_number().over(wq))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-    cand = probed.join(
-        assigned, (probed.cell == assigned.cell) & (F.col("query_id") != assigned.vec_id)
-    ).select("query_id", "qv", F.col("vec_id").alias("neighbor_id"), "v")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", "neighbor_id", _cos("qv", "v").alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    ed = _vectors(spark, sf_dir)
+    cents, _nlist, nprobe = _train_ivf(_train_sample(ed))
+    return _probe_and_rank(
+        _centroid_frame(spark, cents), nprobe, _queries(ed), _assign_cells(ed, cents)
     )
 
 
@@ -360,6 +429,42 @@ def _train_pq_codebooks(vectors: np.ndarray) -> np.ndarray:
     )
 
 
+def _pq_codes(m: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(batch, M) PQ codes: per subspace, the nearest codeword of that
+    subspace's codebook."""
+    sub = books.shape[2]
+    return np.stack(
+        [_nearest(m[:, i * sub : (i + 1) * sub], book) for i, book in enumerate(books)],
+        axis=1,
+    )
+
+
+def _pq_coded(vectors: DataFrame, books: np.ndarray) -> DataFrame:
+    """``(vec_id, codes)``: every vector's packed ``PQ_BYTES`` code
+    stream from one vectorized Arrow ``pandas_udf`` (the build-side
+    encode of the flat-PQ tiers)."""
+
+    @pandas_udf("binary")
+    def encode(vs: pd.Series) -> pd.Series:
+        packed = _pack_codes_np(_pq_codes(np.stack(vs.to_numpy()), books))
+        return pd.Series([row.tobytes() for row in packed])
+
+    return vectors.select("vec_id", encode(F.col("v")).alias("codes"))
+
+
+def _subspace_lut(q: np.ndarray, books: np.ndarray) -> list[float]:
+    """One (M·K) ADC lookup table: the squared distance from each
+    subspace slice of ``q`` to each of that subspace's codewords."""
+    sub = books.shape[2]
+    lut = np.concatenate(
+        [
+            ((book - q[i * sub : (i + 1) * sub]) ** 2).sum(axis=1)
+            for i, book in enumerate(books)
+        ]
+    )
+    return [float(x) for x in lut]
+
+
 def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate cosine top-k via PRODUCT QUANTIZATION + asymmetric
     distance computation — the industrial 100 TB ANN memory layout
@@ -383,66 +488,29 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        window whose ``row_number ≤ n`` filter Spark ≥3.5 plans as a
        partial WindowGroupLimit below the exchange — each scan task
        ships only its local top shortlist_n per query, so no task ever
-       sorts N rows (the bound VERDICT r6 "What's wrong" #1 demanded,
-       previously hand-built as a two-stage
-       (query_id, spark_partition_id) pre-rank — r15 folded it into
-       the planner's form, one exchange instead of two);
+       sorts N rows, with one exchange (see ``_pq_adc_topk``);
     5. exact re-rank: only the shortlist touches raw vectors.
 
     The embeddings are unit-norm, so ADC's L2 ordering tracks cosine.
     Recall < 1 by construction → rows-only oracle;
     ``sim_pq_recall_check`` puts the measured recall floor under the
     driver hash like the LSH/IVF tiers."""
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    sample_rows = (
-        ed.orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED)))
-        .limit(IVF_TRAIN_SAMPLE)
-        .collect()
-    )
-    books = _train_pq_codebooks(np.array([r["v"] for r in sample_rows]))
-    sub = books.shape[2]
-
-    @pandas_udf("binary")
-    def encode(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy())  # (batch, dim)
-        codes = np.empty((len(vs), PQ_M), dtype=np.int64)
-        for mi in range(PQ_M):
-            sl = m[:, mi * sub : (mi + 1) * sub]
-            d2 = (
-                (sl**2).sum(axis=1)[:, None]
-                - 2.0 * (sl @ books[mi].T)
-                + (books[mi] ** 2).sum(axis=1)[None, :]
-            )
-            codes[:, mi] = d2.argmin(axis=1)
-        packed = _pack_codes_np(codes)
-        return pd.Series([packed[i].tobytes() for i in range(len(vs))])
-
-    coded = ed.select("vec_id", encode(F.col("v")).alias("codes"))
-    luts = _pq_query_luts(spark, ed, books, sub)
-    return _pq_adc_topk(ed, coded, luts)
+    ed = _vectors(spark, sf_dir)
+    books = _train_pq_codebooks(_train_sample(ed))
+    return _pq_adc_topk(ed, _pq_coded(ed, books), _pq_query_luts(spark, ed, books))
 
 
-def _pq_query_luts(
-    spark: SparkSession, ed: DataFrame, books: np.ndarray, sub: int
-) -> DataFrame:
+def _pq_query_luts(spark: SparkSession, ed: DataFrame, books: np.ndarray) -> DataFrame:
     """Per-query ADC lookup tables, computed driver-side from the
     codebooks (Q·M·K doubles — broadcast-sized at any corpus scale).
     Shared by the in-process tier and the persisted read path (which
     feeds codebooks READ BACK from parquet — float64 round-trips
     exactly, so the LUTs, and therefore the results, are
     bit-identical)."""
-    qrows = ed.filter(F.col("vec_id") < N_QUERIES).collect()
-    lut_rows = []
-    for r in qrows:
-        qv = np.array(r["v"])
-        lut = np.empty(PQ_M * PQ_K)
-        for mi in range(PQ_M):
-            qs = qv[mi * sub : (mi + 1) * sub]
-            lut[mi * PQ_K : (mi + 1) * PQ_K] = ((books[mi] - qs) ** 2).sum(
-                axis=1
-            )
-        lut_rows.append((r["vec_id"], [float(x) for x in lut]))
+    lut_rows = [
+        (r["vec_id"], _subspace_lut(np.array(r["v"]), books))
+        for r in ed.filter(F.col("vec_id") < N_QUERIES).collect()
+    ]
     return spark.createDataFrame(lut_rows, "query_id long, lut array<double>")
 
 
@@ -462,14 +530,14 @@ def _pq_adc_topk(
     unpacked = coded.select("vec_id", *_pq_unpack("codes"))
     adc = _pq_adc("lut")
     shortlist_n = PQ_SHORTLIST_MULT * TOP_K
-    # Bounded selection is ONE window now (r15): Spark ≥3.5's
+    # Bounded selection is one window: Spark ≥3.5's
     # InferWindowGroupLimit plans the `row_number ≤ n` filter as a
     # partial WindowGroupLimit BELOW the exchange, so each scan task
-    # ships only its local top shortlist_n per query — exactly the
-    # bound the previous hand-built (query_id, spark_partition_id)
-    # pre-stage enforced, minus that stage's second exchange + sort
-    # (plan diff in plans/r15/sim_pq_topk_after.txt; rows identical at
-    # every SF — a single full window is the defining semantics).
+    # ships only its local top shortlist_n per query, through a single
+    # exchange + sort (plans/r15/sim_pq_topk_after.txt). A hand-built
+    # (query_id, spark_partition_id) pre-rank gives the same bound at
+    # the cost of a second exchange; the full window is the defining
+    # semantics, so the rows are partitioning-independent.
     ws = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
     shortlist = (
         F.broadcast(luts)
@@ -487,17 +555,10 @@ def _pq_adc_topk(
 def _exact_rerank(ed: DataFrame, shortlist: DataFrame) -> DataFrame:
     """Exact-cosine re-rank of a (query_id, neighbor_id) shortlist —
     only these rows ever touch raw vectors."""
-    q = ed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        shortlist.join(F.broadcast(q), "query_id")
+    return _rank_top_k(
+        shortlist.join(F.broadcast(_queries(ed)), "query_id")
         .join(ed.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
         .select("query_id", "neighbor_id", _cos("qv", "v").alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -532,62 +593,45 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall < 1 by construction → rows-only oracle;
     ``sim_ivfpq_recall_check`` pins the measured floor under the
     driver hash like the other three ANN tiers."""
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    sample_rows = (
-        ed.orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED)))
-        .limit(IVF_TRAIN_SAMPLE)
-        .collect()
-    )
-    sample = np.array([r["v"] for r in sample_rows])
-    nlist, nprobe = _ivf_geometry(len(sample_rows))
-    cents = _train_centroids(sample, nlist)
-    cnorm = (cents**2).sum(axis=1)
+    ed = _vectors(spark, sf_dir)
+    cents, books, _nlist, nprobe = _train_ivfpq(_train_sample(ed))
+    coded = _ivfpq_coded(ed, cents, books)
+    luts = _ivfpq_query_luts(spark, ed, cents, books, nprobe)
+    return _ivfpq_adc_topk(ed, coded, luts)
 
-    # residual codebooks: train on sample residuals vs the coarse cells
-    d2s = (sample**2).sum(axis=1)[:, None] - 2.0 * (sample @ cents.T) + cnorm
-    resid_sample = sample - cents[d2s.argmin(axis=1)]
-    books = _train_pq_codebooks(resid_sample)
-    sub = books.shape[2]
+
+def _train_ivfpq(sample: np.ndarray) -> tuple[np.ndarray, np.ndarray, int, int]:
+    """IVF-PQ quantizers for a training sample: ``(centroids,
+    residual codebooks, nlist, nprobe)``. The codebooks train on each
+    sample vector's residual against its coarse cell."""
+    cents, nlist, nprobe = _train_ivf(sample)
+    books = _train_pq_codebooks(sample - cents[_nearest(sample, cents)])
+    return cents, books, nlist, nprobe
+
+
+def _ivfpq_coded(vectors: DataFrame, cents: np.ndarray, books: np.ndarray) -> DataFrame:
+    """``(vec_id, cell, codes)``: each vector's coarse cell plus its
+    packed residual codes, from one vectorized Arrow ``pandas_udf``."""
 
     @pandas_udf("struct<cell:int, codes:binary>")
     def assign_encode(vs: pd.Series) -> pd.DataFrame:
         m = np.stack(vs.to_numpy())
-        d2 = (m**2).sum(axis=1)[:, None] - 2.0 * (m @ cents.T) + cnorm[None, :]
-        cell = d2.argmin(axis=1)
-        resid = m - cents[cell]
-        codes = np.empty((len(vs), PQ_M), dtype=np.int64)
-        for mi in range(PQ_M):
-            sl = resid[:, mi * sub : (mi + 1) * sub]
-            dd = (
-                (sl**2).sum(axis=1)[:, None]
-                - 2.0 * (sl @ books[mi].T)
-                + (books[mi] ** 2).sum(axis=1)[None, :]
-            )
-            codes[:, mi] = dd.argmin(axis=1)
-        packed = _pack_codes_np(codes)
+        cell = _nearest(m, cents)
+        packed = _pack_codes_np(_pq_codes(m - cents[cell], books))
         return pd.DataFrame(
-            {
-                "cell": cell.astype(np.int32),
-                "codes": [packed[i].tobytes() for i in range(len(vs))],
-            }
+            {"cell": cell.astype(np.int32), "codes": [row.tobytes() for row in packed]}
         )
 
-    coded = ed.select(
-        "vec_id", assign_encode(F.col("v")).alias("ce")
-    ).select("vec_id", F.col("ce.cell").alias("cell"), F.col("ce.codes").alias("codes"))
-
-    luts = _ivfpq_query_luts(spark, ed, cents, cnorm, books, sub, nprobe)
-    return _ivfpq_adc_topk(ed, coded, luts)
+    return vectors.select("vec_id", assign_encode(F.col("v")).alias("ce")).select(
+        "vec_id", F.col("ce.cell").alias("cell"), F.col("ce.codes").alias("codes")
+    )
 
 
 def _ivfpq_query_luts(
     spark: SparkSession,
     ed: DataFrame,
     cents: np.ndarray,
-    cnorm: np.ndarray,
     books: np.ndarray,
-    sub: int,
     nprobe: int,
 ) -> DataFrame:
     """Driver-side probe + per-(query, cell) residual LUTs: the query's
@@ -596,20 +640,14 @@ def _ivfpq_query_luts(
     Shared by the in-process tier and the persisted read path (both
     centroids and codebooks round-trip parquet float64 exactly, so the
     probe set and LUTs are bit-identical)."""
-    qrows = ed.filter(F.col("vec_id") < N_QUERIES).collect()
+    cnorm = (cents**2).sum(axis=1)
     lut_rows = []
-    for r in qrows:
+    for r in ed.filter(F.col("vec_id") < N_QUERIES).collect():
         qv = np.array(r["v"])
         qd2 = (qv**2).sum() - 2.0 * (cents @ qv) + cnorm
         for cell in np.argsort(qd2, kind="stable")[:nprobe]:
-            qres = qv - cents[cell]
-            lut = np.empty(PQ_M * PQ_K)
-            for mi in range(PQ_M):
-                qs = qres[mi * sub : (mi + 1) * sub]
-                lut[mi * PQ_K : (mi + 1) * PQ_K] = (
-                    (books[mi] - qs) ** 2
-                ).sum(axis=1)
-            lut_rows.append((r["vec_id"], int(cell), [float(x) for x in lut]))
+            lut = _subspace_lut(qv - cents[cell], books)
+            lut_rows.append((r["vec_id"], int(cell), lut))
     return spark.createDataFrame(
         lut_rows, "query_id long, cell int, lut array<double>"
     )
@@ -651,17 +689,13 @@ def sim_delivery_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself (delivery is 10% of the corpus, so the pair space is
     0.1·N² — fine as a CHECK, the thing the IVF tier exists to avoid
     as a production path)."""
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    ed = _vectors(spark, sf_dir)
     is_new = F.col("vec_id") % DELIVERY_MOD == DELIVERY_MOD - 1
     q = ed.filter(is_new).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     base = ed.filter(~is_new)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
+    return _rank_top_k(
         F.broadcast(q)
         .join(base, F.lit(True))
         .select(
@@ -669,9 +703,6 @@ def sim_delivery_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("neighbor_id"),
             _cos("qv", "v").alias("cosine"),
         )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -692,60 +723,20 @@ def sim_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells it is being matched into). Recall < 1 by construction →
     rows-only oracle; ``sim_incremental_recall_check`` pins the floor
     vs ``sim_delivery_brute_topk`` under the driver hash."""
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    ed = _vectors(spark, sf_dir)
     is_new = F.col("vec_id") % DELIVERY_MOD == DELIVERY_MOD - 1
     base = ed.filter(~is_new)
-    delivery = ed.filter(is_new)
-    sample_rows = (
-        base.orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED)))
-        .limit(IVF_TRAIN_SAMPLE)
-        .collect()
-    )
-    nlist, nprobe = _ivf_geometry(len(sample_rows))
-    cents = _train_centroids(np.array([r["v"] for r in sample_rows]), nlist)
-    cmat, cnorm = cents, (cents**2).sum(axis=1)
-
-    @pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy())
-        d2 = (m**2).sum(axis=1)[:, None] - 2.0 * (m @ cmat.T) + cnorm[None, :]
-        return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
+    cents, _nlist, nprobe = _train_ivf(_train_sample(base))
     # the persisted inverted lists (stand-in: checkpointed frame)
-    assigned_base = base.withColumn("cell", cell_of(F.col("v"))).localCheckpoint()
-
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, cv array<double>",
+    assigned_base = _assign_cells(base, cents).localCheckpoint()
+    queries = ed.filter(is_new).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    l2 = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probed = (
-        delivery.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-        .crossJoin(F.broadcast(cent_df))
-        .withColumn("d2", l2)
-        .withColumn("prn", F.row_number().over(wq))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-    cand = probed.join(assigned_base, "cell").select(
-        "query_id", "qv", F.col("vec_id").alias("neighbor_id"), "v"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", "neighbor_id", _cos("qv", "v").alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    cent_df = _centroid_frame(spark, cents)
+    return _probe_and_rank(cent_df, nprobe, queries, assigned_base, self_exclude=False)
 
 
-#: Deletion split (r8 Next #5): two tombstone waves over the corpus —
+#: Deletion split: two tombstone waves over the corpus —
 #: wave A (``% DEL_MOD == DEL_COMPACTED``) has already been folded in
 #: by compaction (the affected inverted lists were rebuilt), wave B
 #: (``% DEL_MOD == DEL_PENDING``) is pending and must be masked by a
@@ -770,30 +761,7 @@ def sim_delete_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured against. A deleted vector must appear neither as a query
     nor as a neighbor; the driver hash proves the survivor set is
     exactly the complement of the two tombstone waves."""
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).filter(~_is_deleted())
-    q = ed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scored = (
-        F.broadcast(q)
-        .join(ed, F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos("qv", "v").alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return brute_topk_over_live(_vectors(spark, sf_dir).filter(~_is_deleted()))
 
 
 def sim_delete_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,27 +786,12 @@ def sim_delete_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against the (small) pending-tombstone set. Recall < 1 by
     construction → rows-only oracle; ``sim_delete_recall_check`` pins
     the floor vs ``sim_delete_brute_topk`` under the driver hash."""
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    ed = _vectors(spark, sf_dir)
     live = ed.filter(~_is_deleted())
     # quantizer trained on the pre-delete base (the persisted artifact)
-    sample_rows = (
-        ed.orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED)))
-        .limit(IVF_TRAIN_SAMPLE)
-        .collect()
-    )
-    nlist, nprobe = _ivf_geometry(len(sample_rows))
-    cents = _train_centroids(np.array([r["v"] for r in sample_rows]), nlist)
-    cmat, cnorm = cents, (cents**2).sum(axis=1)
-
-    @pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy())
-        d2 = (m**2).sum(axis=1)[:, None] - 2.0 * (m @ cmat.T) + cnorm[None, :]
-        return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
+    cents, _nlist, nprobe = _train_ivf(_train_sample(ed))
     # the persisted inverted lists (pre-delete index state)
-    assigned = ed.withColumn("cell", cell_of(F.col("v"))).localCheckpoint()
+    assigned = _assign_cells(ed, cents).localCheckpoint()
 
     # ---- compaction of wave A: rebuild ONLY the affected cells ----
     wave_a = assigned.filter(F.col("vec_id") % DEL_MOD == DEL_COMPACTED)
@@ -853,47 +806,12 @@ def sim_delete_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pending = ed.filter(F.col("vec_id") % DEL_MOD == DEL_PENDING).select(
         "vec_id"
     )
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, cv array<double>",
-    )
-    l2 = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probed = (
-        live.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-        .crossJoin(F.broadcast(cent_df))
-        .withColumn("d2", l2)
-        .withColumn("prn", F.row_number().over(wq))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-    cand = (
-        probed.join(
-            compacted,
-            (probed.cell == compacted.cell)
-            & (F.col("query_id") != compacted.vec_id),
-        )
-        .join(F.broadcast(pending), "vec_id", "left_anti")
-        .select("query_id", "qv", F.col("vec_id").alias("neighbor_id"), "v")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        cand.select("query_id", "neighbor_id", _cos("qv", "v").alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    cent_df = _centroid_frame(spark, cents)
+    return _probe_and_rank(cent_df, nprobe, _queries(live), compacted, pending=pending)
 
 
 # ---------------------------------------------------------------------------
-# Persisted-index lifecycle (r9 VERDICT Next #3): build-once / query-many.
+# Persisted-index lifecycle: build-once / query-many.
 # Every other sim_* entry trains + assigns inside the query call — right for
 # proofs, but the production shape persists the index artifacts and serves
 # queries from a pure READ path. The artifacts mirror what FAISS/Milvus-style
@@ -938,40 +856,12 @@ def sim_ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         meta = spark.read.parquet(f"{d}/meta").collect()[0]
         nlist = meta["nlist"]
     except AnalysisException:
-        e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-        ed = e.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        ed = _vectors(spark, sf_dir)
+        cents, nlist, nprobe = _train_ivf(_train_sample(ed))
+        _centroid_frame(spark, cents).write.mode("overwrite").parquet(f"{d}/centroids")
+        _assign_cells(ed, cents).write.mode("overwrite").partitionBy("cell").parquet(
+            f"{d}/postings"
         )
-        sample_rows = (
-            ed.orderBy(
-                F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED))
-            )
-            .limit(IVF_TRAIN_SAMPLE)
-            .collect()
-        )
-        nlist, nprobe = _ivf_geometry(len(sample_rows))
-        cents = _train_centroids(
-            np.array([r["v"] for r in sample_rows]), nlist
-        )
-        cmat, cnorm = cents, (cents**2).sum(axis=1)
-
-        @pandas_udf("int")
-        def cell_of(vs: pd.Series) -> pd.Series:
-            m = np.stack(vs.to_numpy())
-            d2 = (
-                (m**2).sum(axis=1)[:, None]
-                - 2.0 * (m @ cmat.T)
-                + cnorm[None, :]
-            )
-            return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cell int, cv array<double>",
-        ).write.mode("overwrite").parquet(f"{d}/centroids")
-        ed.withColumn("cell", cell_of(F.col("v"))).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(f"{d}/postings")
         n_vectors = spark.read.parquet(f"{d}/postings").count()
         spark.createDataFrame(
             [(int(nlist), int(nprobe), int(n_vectors))],
@@ -988,56 +878,6 @@ def sim_ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.min("cell") >= F.lit(0))
             & (F.max("cell") < F.lit(int(nlist)))
         ).alias("cells_within_geometry"),
-    )
-
-
-def _probe_and_rank(
-    cent_df: DataFrame,
-    nprobe: int,
-    queries: DataFrame,
-    postings: DataFrame,
-    pending: DataFrame | None = None,
-    self_exclude: bool = True,
-) -> DataFrame:
-    """The shared persisted-read-path tail: rank the broadcast
-    centroids per query (JVM HOF ℓ², bounded fan-out), take candidates
-    from the probed cells of ``postings`` (equi-join on cell — with the
-    small probed side broadcast, dynamic partition pruning skips
-    unprobed cells' files), optionally mask ``pending`` tombstones with
-    a broadcast anti-join, exact-cosine re-rank to top-k. Entirely
-    JVM-side: no training, no Python eval."""
-    l2 = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probed = (
-        queries.crossJoin(F.broadcast(cent_df))
-        .withColumn("d2", l2)
-        .withColumn("prn", F.row_number().over(wq))
-        .filter(F.col("prn") <= nprobe)
-        .select("query_id", "qv", "cell")
-    )
-    cond = probed.cell == postings.cell
-    if self_exclude:
-        cond = cond & (F.col("query_id") != postings.vec_id)
-    cand = probed.join(postings, cond)
-    if pending is not None:
-        cand = cand.join(F.broadcast(pending), "vec_id", "left_anti")
-    cand = cand.select(
-        "query_id", "qv", F.col("vec_id").alias("neighbor_id"), "v"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        cand.select(
-            "query_id", "neighbor_id", _cos("qv", "v").alias("cosine")
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -1066,10 +906,7 @@ def sim_persisted_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe = int(meta["nprobe"])
     cent_df = spark.read.parquet(f"{d}/centroids")
     postings = spark.read.parquet(f"{d}/postings")
-    queries = postings.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    return _probe_and_rank(cent_df, nprobe, queries, postings)
+    return _probe_and_rank(cent_df, nprobe, _queries(postings), postings)
 
 
 def sim_persisted_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1179,10 +1016,7 @@ def sim_persisted_delete_ivf_topk(
     pending = compacted.filter(
         F.col("vec_id") % DEL_MOD == DEL_PENDING
     ).select("vec_id")
-    live = compacted.filter(~_is_deleted())
-    queries = live.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    queries = _queries(compacted.filter(~_is_deleted()))
     return _probe_and_rank(cent_df, nprobe, queries, compacted, pending=pending)
 
 
@@ -1210,64 +1044,19 @@ def sim_persisted_ingest_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         meta = spark.read.parquet(f"{d}/insert_delta/meta").collect()[0]
         nlist = int(meta["nlist"])
     except AnalysisException:
-        e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-        ed = e.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
+        ed = _vectors(spark, sf_dir)
         base = ed.filter(~is_new)
-        sample_rows = (
-            base.orderBy(
-                F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED))
-            )
-            .limit(IVF_TRAIN_SAMPLE)
-            .collect()
+        cents, nlist, nprobe = _train_ivf(_train_sample(base))
+        _centroid_frame(spark, cents).write.mode("overwrite").parquet(f"{d}/centroids")
+        _assign_cells(base, cents).write.mode("overwrite").partitionBy("cell").parquet(
+            f"{d}/postings"
         )
-        nlist, nprobe = _ivf_geometry(len(sample_rows))
-        cents = _train_centroids(
-            np.array([r["v"] for r in sample_rows]), nlist
-        )
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cell int, cv array<double>",
-        ).write.mode("overwrite").parquet(f"{d}/centroids")
-
-        cmat, cnorm = cents, (cents**2).sum(axis=1)
-
-        @pandas_udf("int")
-        def cell_of(vs: pd.Series) -> pd.Series:
-            m = np.stack(vs.to_numpy())
-            d2 = (
-                (m**2).sum(axis=1)[:, None]
-                - 2.0 * (m @ cmat.T)
-                + cnorm[None, :]
-            )
-            return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
-        base.withColumn("cell", cell_of(F.col("v"))).write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(f"{d}/postings")
         # the INGEST step: assign the delivery to the PERSISTED
         # centroids (read back — the build's in-memory copy is gone in
         # a real ingest job) and write the delta segment
-        pc = spark.read.parquet(f"{d}/centroids").orderBy("cell").collect()
-        pmat = np.array([r["cv"] for r in pc])
-        pnorm = (pmat**2).sum(axis=1)
-
-        @pandas_udf("int")
-        def cell_of_persisted(vs: pd.Series) -> pd.Series:
-            m = np.stack(vs.to_numpy())
-            d2 = (
-                (m**2).sum(axis=1)[:, None]
-                - 2.0 * (m @ pmat.T)
-                + pnorm[None, :]
-            )
-            return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
-        ed.filter(is_new).withColumn(
-            "cell", cell_of_persisted(F.col("v"))
-        ).write.mode("overwrite").partitionBy("cell").parquet(
-            f"{d}/insert_delta/postings"
-        )
+        _assign_cells(ed.filter(is_new), _read_centroids(spark, d)).write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(f"{d}/insert_delta/postings")
         spark.createDataFrame(
             [(int(nlist), int(nprobe))], "nlist int, nprobe int"
         ).write.mode("overwrite").parquet(f"{d}/insert_delta/meta")
@@ -1324,7 +1113,7 @@ def sim_persisted_delivery_topk(
     )
 
 
-#: Background-compaction policy (r10 VERDICT Next #5): fold the delta
+#: Background-compaction policy: fold the delta
 #: stack into a new base version once it holds this many segments. The
 #: policy is deterministic so the merge entry is driver-hashable; a
 #: production scheduler would evaluate the same predicate on a timer.
@@ -1355,28 +1144,12 @@ def _ensure_multi_deltas(spark: SparkSession, sf_dir: str) -> str:
         return d
     except AnalysisException:
         pass
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    pc = spark.read.parquet(f"{d}/centroids").orderBy("cell").collect()
-    pmat = np.array([r["cv"] for r in pc])
-    pnorm = (pmat**2).sum(axis=1)
-
-    @pandas_udf("int")
-    def cell_of_persisted(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy())
-        d2 = (
-            (m**2).sum(axis=1)[:, None] - 2.0 * (m @ pmat.T) + pnorm[None, :]
-        )
-        return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
+    ed = _vectors(spark, sf_dir)
+    cents = _read_centroids(spark, d)
     for seg, rem in waves.items():
-        ed.filter(F.col("vec_id") % mod2 == rem).withColumn(
-            "cell", cell_of_persisted(F.col("v"))
-        ).write.mode("overwrite").partitionBy("cell").parquet(
-            f"{d}/{seg}/postings"
-        )
+        _assign_cells(ed.filter(F.col("vec_id") % mod2 == rem), cents).write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(f"{d}/{seg}/postings")
         spark.createDataFrame(
             [(seg, int(rem))], "segment string, delivery_rem int"
         ).write.mode("overwrite").parquet(f"{d}/{seg}/meta")
@@ -1384,8 +1157,8 @@ def _ensure_multi_deltas(spark: SparkSession, sf_dir: str) -> str:
 
 
 def sim_persisted_merge_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BACKGROUND COMPACTION of the insert-delta stack (r10 VERDICT
-    Next #5): once the stack reaches ``MERGE_TRIGGER_SEGMENTS``
+    """BACKGROUND COMPACTION of the insert-delta stack: once the
+    stack reaches ``MERGE_TRIGGER_SEGMENTS``
     segments, fold base + all deltas into a VERSIONED merged base —
     segment-store style. Only cells TOUCHED BY A DELTA are rewritten
     (base rows of those cells ∪ all delta rows, cell-partitioned under
@@ -1580,10 +1353,10 @@ def _merged_reader_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Persisted PQ / IVF-PQ lifecycle (r10 VERDICT Next #4): the two compressed
-# tiers get the same build-once / query-many split the flat IVF tier got in
-# r10. Build persists the trained codebooks (+ coarse centroids for IVF-PQ)
-# and the PACKED 10-byte code stream; the read path trains nothing — it
+# Persisted PQ / IVF-PQ lifecycle: the two compressed tiers get the same
+# build-once / query-many split as the flat IVF tier. Build persists the
+# trained codebooks (+ coarse centroids for IVF-PQ) and the PACKED 10-byte
+# code stream; the read path trains nothing — it
 # loads the quantizers from parquet (float64 round-trips exactly, so LUTs
 # and results are bit-identical to the in-process tiers, asserted in
 # tests/test_persisted_pq.py) and runs the shared pure-JVM ADC tail. At
@@ -1660,43 +1433,16 @@ def sim_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.errors import AnalysisException
 
     d = _pq_index_dir(spark, sf_dir)
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    ed = _vectors(spark, sf_dir)
     try:
         spark.read.parquet(f"{d}/meta").collect()
     except AnalysisException:
-        sample_rows = (
-            ed.orderBy(
-                F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED))
-            )
-            .limit(IVF_TRAIN_SAMPLE)
-            .collect()
-        )
-        books = _train_pq_codebooks(np.array([r["v"] for r in sample_rows]))
-        sub = books.shape[2]
-
-        @pandas_udf("binary")
-        def encode(vs: pd.Series) -> pd.Series:
-            m = np.stack(vs.to_numpy())
-            codes = np.empty((len(vs), PQ_M), dtype=np.int64)
-            for mi in range(PQ_M):
-                sl = m[:, mi * sub : (mi + 1) * sub]
-                d2 = (
-                    (sl**2).sum(axis=1)[:, None]
-                    - 2.0 * (sl @ books[mi].T)
-                    + (books[mi] ** 2).sum(axis=1)[None, :]
-                )
-                codes[:, mi] = d2.argmin(axis=1)
-            packed = _pack_codes_np(codes)
-            return pd.Series([packed[i].tobytes() for i in range(len(vs))])
-
+        books = _train_pq_codebooks(_train_sample(ed))
         _write_codebooks(spark, books, f"{d}/codebooks")
-        ed.select("vec_id", encode(F.col("v")).alias("codes")).write.mode(
-            "overwrite"
-        ).parquet(f"{d}/codes")
+        _pq_coded(ed, books).write.mode("overwrite").parquet(f"{d}/codes")
         n = spark.read.parquet(f"{d}/codes").count()
         spark.createDataFrame(
-            [(PQ_M, PQ_K, PQ_BITS, int(sub), int(n))],
+            [(PQ_M, PQ_K, PQ_BITS, int(books.shape[2]), int(n))],
             "m int, k int, bits int, sub int, n_vectors bigint",
         ).write.mode("overwrite").parquet(f"{d}/meta")
     return _pq_build_summary(
@@ -1719,16 +1465,13 @@ def sim_persisted_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _pq_index_dir(spark, sf_dir)
     try:
-        meta = spark.read.parquet(f"{d}/meta").collect()[0]
+        spark.read.parquet(f"{d}/meta").collect()
     except AnalysisException:
         sim_pq_index_build(spark, sf_dir)
-        meta = spark.read.parquet(f"{d}/meta").collect()[0]
     books = _read_codebooks(spark, f"{d}/codebooks")
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    ed = _vectors(spark, sf_dir)
     coded = spark.read.parquet(f"{d}/codes")
-    luts = _pq_query_luts(spark, ed, books, int(meta["sub"]))
-    return _pq_adc_topk(ed, coded, luts)
+    return _pq_adc_topk(ed, coded, _pq_query_luts(spark, ed, books))
 
 
 def sim_ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1742,69 +1485,19 @@ def sim_ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.errors import AnalysisException
 
     d = _ivfpq_index_dir(spark, sf_dir)
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    ed = _vectors(spark, sf_dir)
     try:
         meta = spark.read.parquet(f"{d}/meta").collect()[0]
     except AnalysisException:
-        sample_rows = (
-            ed.orderBy(
-                F.xxhash64(F.col("vec_id").cast("string"), F.lit(LSH_SEED))
-            )
-            .limit(IVF_TRAIN_SAMPLE)
-            .collect()
-        )
-        sample = np.array([r["v"] for r in sample_rows])
-        nlist, nprobe = _ivf_geometry(len(sample_rows))
-        cents = _train_centroids(sample, nlist)
-        cnorm = (cents**2).sum(axis=1)
-        d2s = (
-            (sample**2).sum(axis=1)[:, None] - 2.0 * (sample @ cents.T) + cnorm
-        )
-        resid_sample = sample - cents[d2s.argmin(axis=1)]
-        books = _train_pq_codebooks(resid_sample)
-        sub = books.shape[2]
-
-        @pandas_udf("struct<cell:int, codes:binary>")
-        def assign_encode(vs: pd.Series) -> pd.DataFrame:
-            m = np.stack(vs.to_numpy())
-            d2 = (
-                (m**2).sum(axis=1)[:, None]
-                - 2.0 * (m @ cents.T)
-                + cnorm[None, :]
-            )
-            cell = d2.argmin(axis=1)
-            resid = m - cents[cell]
-            codes = np.empty((len(vs), PQ_M), dtype=np.int64)
-            for mi in range(PQ_M):
-                sl = resid[:, mi * sub : (mi + 1) * sub]
-                dd = (
-                    (sl**2).sum(axis=1)[:, None]
-                    - 2.0 * (sl @ books[mi].T)
-                    + (books[mi] ** 2).sum(axis=1)[None, :]
-                )
-                codes[:, mi] = dd.argmin(axis=1)
-            packed = _pack_codes_np(codes)
-            return pd.DataFrame(
-                {
-                    "cell": cell.astype(np.int32),
-                    "codes": [packed[i].tobytes() for i in range(len(vs))],
-                }
-            )
-
-        spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cell int, cv array<double>",
-        ).write.mode("overwrite").parquet(f"{d}/centroids")
+        cents, books, nlist, nprobe = _train_ivfpq(_train_sample(ed))
+        _centroid_frame(spark, cents).write.mode("overwrite").parquet(f"{d}/centroids")
         _write_codebooks(spark, books, f"{d}/codebooks")
-        ed.select("vec_id", assign_encode(F.col("v")).alias("ce")).select(
-            "vec_id",
-            F.col("ce.cell").alias("cell"),
-            F.col("ce.codes").alias("codes"),
-        ).write.mode("overwrite").partitionBy("cell").parquet(f"{d}/codes")
+        _ivfpq_coded(ed, cents, books).write.mode("overwrite").partitionBy(
+            "cell"
+        ).parquet(f"{d}/codes")
         n = spark.read.parquet(f"{d}/codes").count()
         spark.createDataFrame(
-            [(int(nlist), int(nprobe), int(sub), int(n))],
+            [(int(nlist), int(nprobe), int(books.shape[2]), int(n))],
             "nlist int, nprobe int, sub int, n_vectors bigint",
         ).write.mode("overwrite").parquet(f"{d}/meta")
         meta = spark.read.parquet(f"{d}/meta").collect()[0]
@@ -1836,16 +1529,11 @@ def sim_persisted_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     except AnalysisException:
         sim_ivfpq_index_build(spark, sf_dir)
         meta = spark.read.parquet(f"{d}/meta").collect()[0]
-    crows = spark.read.parquet(f"{d}/centroids").orderBy("cell").collect()
-    cents = np.array([r["cv"] for r in crows])
-    cnorm = (cents**2).sum(axis=1)
+    cents = _read_centroids(spark, d)
     books = _read_codebooks(spark, f"{d}/codebooks")
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    ed = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    ed = _vectors(spark, sf_dir)
     coded = spark.read.parquet(f"{d}/codes")
-    luts = _ivfpq_query_luts(
-        spark, ed, cents, cnorm, books, int(meta["sub"]), int(meta["nprobe"])
-    )
+    luts = _ivfpq_query_luts(spark, ed, cents, books, int(meta["nprobe"]))
     return _ivfpq_adc_topk(ed, coded, luts)
 
 

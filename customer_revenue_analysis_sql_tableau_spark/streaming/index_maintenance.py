@@ -43,11 +43,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load_tables
 from ..lake_core import atomic_write_json, content_digest, read_json
@@ -56,8 +53,13 @@ from ..operators.similarity import (
     MERGE_TRIGGER_SEGMENTS,
     N_QUERIES,
     TOP_K,
+    _assign_cells,
     _ivf_index_dir,
     _probe_and_rank,
+    _queries,
+    _read_centroids,
+    _vectors,
+    brute_topk_over_live,
     sim_persisted_ingest_delta,
 )
 from ..session import drain, read_file_stream, stage_deliveries
@@ -84,6 +86,29 @@ def _streamed_dir(spark: SparkSession, sf_dir: str) -> str:
 
 def _base_dir(spark: SparkSession, sf_dir: str) -> str:
     return f"{_ivf_index_dir(spark, sf_dir)}_base"
+
+
+def _folds(spark: SparkSession, store_dir: str) -> dict[int, set[str]]:
+    """The store's manifest-committed folds in version order:
+    ``{version: folded segment names}``. A fold commits at its
+    manifest (written last), so a ``folded`` list without one is a torn
+    fold and hides nothing (tests/test_streamed_index.py rips the
+    manifest off and asserts the replay re-folds)."""
+    import glob
+    import os
+
+    root = store_dir.removeprefix("file:")
+    versions = sorted(
+        int(os.path.basename(os.path.dirname(p)).removeprefix("merged_v"))
+        for p in glob.glob(f"{root}/merged_v*/manifest")
+    )
+    return {
+        v: {
+            r["segment"]
+            for r in spark.read.parquet(f"{store_dir}/merged_v{v}/folded").collect()
+        }
+        for v in versions
+    }
 
 
 def _apply_fold(
@@ -143,30 +168,16 @@ def _ensure_streamed_index(
     # ensure the shared immutable base index (centroids + postings +
     # geometry meta) exists; its artifacts are never rewritten here
     sim_persisted_ingest_delta(spark, sf_dir).collect()
-    pc = spark.read.parquet(f"{d}/centroids").orderBy("cell").collect()
-    pmat = np.array([r["cv"] for r in pc])
-    pnorm = (pmat**2).sum(axis=1)
-    nlist = int(
-        spark.read.parquet(f"{d}/insert_delta/meta").collect()[0]["nlist"]
-    )
-
-    @pandas_udf("int")
-    def cell_of_persisted(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy())
-        d2 = (
-            (m**2).sum(axis=1)[:, None] - 2.0 * (m @ pmat.T) + pnorm[None, :]
-        )
-        return pd.Series(d2.argmin(axis=1).astype(np.int32))
-
+    cents = _read_centroids(spark, d)
     base_postings = spark.read.parquet(f"{d}/postings").select(
         "vec_id", "v", "cell"
     )
 
-    def pending_segments() -> list[str]:
+    def pending_segments(folds: dict[int, set[str]]) -> list[str]:
         """The scheduling policy's input, read from DISK state: delta
-        segments with a committed meta row, minus those folded per the
-        existing merge manifests — what a production scheduler (a
-        separate process) would see."""
+        segments with a committed meta row, minus those the
+        manifest-committed ``folds`` hold — what a production scheduler
+        (a separate process) would see."""
         import glob
         import os
 
@@ -178,35 +189,16 @@ def _ensure_streamed_index(
             ),
             key=_seg_order,
         )
-        # a fold's commit point is its MANIFEST (written last): a
-        # folded-list left by a torn fold must not hide its segments
-        # from the policy (tests/test_streamed_index.py rips the
-        # manifest off and asserts the replay re-folds)
-        folded: set[str] = set()
-        for v in merged_versions():
-            for r in spark.read.parquet(
-                f"{sdir}/merged_v{v}/folded"
-            ).collect():
-                folded.add(r["segment"])
+        folded = set().union(*folds.values())
         return [s for s in committed if s not in folded]
 
-    def merged_versions() -> list[int]:
-        import glob
-        import os
-
-        root = sdir.removeprefix("file:")
-        return sorted(
-            int(os.path.basename(os.path.dirname(p)).removeprefix("merged_v"))
-            for p in glob.glob(f"{root}/merged_v*/manifest")
-        )
-
-    def current_view() -> DataFrame:
+    def current_view(folds: dict[int, set[str]]) -> DataFrame:
         """Reader view of the maintained index WITHOUT pending deltas:
         base cells untouched by any fold, plus each fold's postings —
         folds touch disjoint cell sets only if deltas do, so apply
         manifests in version order (later versions win their cells)."""
         view = base_postings
-        for v in merged_versions():
+        for v in folds:
             view = _apply_fold(spark, view, sdir, v)
         return view
 
@@ -218,12 +210,7 @@ def _ensure_streamed_index(
         import os
 
         root = sdir.removeprefix("file:")
-        folded: set[str] = set()
-        for v in merged_versions():
-            for r in spark.read.parquet(
-                f"{sdir}/merged_v{v}/folded"
-            ).collect():
-                folded.add(r["segment"])
+        folded = set().union(*_folds(spark, sdir).values())
         deleted = sorted(
             (s for s in folded if os.path.exists(f"{root}/{s}")),
             key=_seg_order,
@@ -236,24 +223,23 @@ def _ensure_streamed_index(
         if batch_df.isEmpty():  # availableNow can add a trailing no-op
             return
         seg = f"delta_b{batch_id}"
-        batch_df.withColumn(
-            "cell", cell_of_persisted(F.col("v"))
-        ).write.mode("overwrite").partitionBy("cell").parquet(
-            f"{sdir}/{seg}/postings"
-        )
+        _assign_cells(batch_df, cents).write.mode("overwrite").partitionBy(
+            "cell"
+        ).parquet(f"{sdir}/{seg}/postings")
         # meta LAST: commits the segment
         spark.createDataFrame(
             [(seg,)], "segment string"
         ).write.mode("overwrite").parquet(f"{sdir}/{seg}/meta")
 
-        pending = pending_segments()
+        folds = _folds(spark, sdir)
+        pending = pending_segments(folds)
         if len(pending) < MERGE_TRIGGER_SEGMENTS:
             if retention:
                 gc_folded_segments(batch_id)
             return
         # compaction: fold the pending stack into the next version,
         # rewriting only delta-touched cells of the current view
-        ver = (merged_versions() or [1])[-1] + 1
+        ver = max(folds, default=1) + 1
         deltas = [
             spark.read.parquet(f"{sdir}/{s}/postings").select(
                 "cell", "vec_id", "v"
@@ -267,7 +253,7 @@ def _ensure_streamed_index(
             int(r["cell"])
             for r in delta_all.select("cell").distinct().collect()
         ]  # bounded by nlist — a driver-side literal, like centroids
-        current_view().filter(F.col("cell").isin(touched)).unionByName(
+        current_view(folds).filter(F.col("cell").isin(touched)).unionByName(
             delta_all
         ).write.mode("overwrite").partitionBy("cell").parquet(
             f"{sdir}/merged_v{ver}/postings"
@@ -284,11 +270,8 @@ def _ensure_streamed_index(
 
     tmp = tempfile.mkdtemp(prefix="stream_index_maint_")
     try:
-        e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-        delivery = e.filter(
+        delivery = _vectors(spark, sf_dir).filter(
             F.col("vec_id") % DELIVERY_MOD == DELIVERY_MOD - 1
-        ).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
         src = stage_deliveries(
             (
@@ -303,10 +286,9 @@ def _ensure_streamed_index(
         shutil.rmtree(tmp, ignore_errors=True)
 
     # final manifest LAST: names every segment's end-of-stream status
-    rows = [(s, "pending") for s in pending_segments()]
-    for v in merged_versions():
-        for r in spark.read.parquet(f"{sdir}/merged_v{v}/folded").collect():
-            rows.append((r["segment"], f"merged_v{v}"))
+    folds = _folds(spark, sdir)
+    rows = [(s, "pending") for s in pending_segments(folds)]
+    rows += [(s, f"merged_v{v}") for v, segs in folds.items() for s in segs]
     spark.createDataFrame(
         sorted(rows, key=lambda r: _seg_order(r[0])),
         "segment string, status string",
@@ -452,11 +434,7 @@ def stream_maintained_index_topk(
     nprobe = int(
         spark.read.parquet(f"{d}/insert_delta/meta").collect()[0]["nprobe"]
     )
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    queries = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
+    queries = _queries(_vectors(spark, sf_dir))
     return _probe_and_rank(cent_df, nprobe, queries, view, self_exclude=True)
 
 
@@ -483,11 +461,7 @@ def stream_flat_stack_index_topk(
     nprobe = int(
         spark.read.parquet(f"{d}/insert_delta/meta").collect()[0]["nprobe"]
     )
-    e = load_tables(spark, sf_dir, names=("embeddings",))["embeddings"]
-    queries = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
+    queries = _queries(_vectors(spark, sf_dir))
     return _probe_and_rank(cent_df, nprobe, queries, flat, self_exclude=True)
 
 
@@ -502,28 +476,17 @@ def _fold_applied_view(
     vacuumed-clone head reader; ``_maintained_reader_postings`` stays
     on the ``final_manifest`` deliberately — it is the end-of-stream
     source of truth, these two resolve from raw store state."""
-    import glob
     import os
 
     root = store_dir.removeprefix("file:")
-    folds: dict[int, set[str]] = {}
-    for p in glob.glob(f"{root}/merged_v*/manifest"):
-        v = int(os.path.basename(os.path.dirname(p)).removeprefix("merged_v"))
-        folded = {
-            r["segment"]
-            for r in spark.read.parquet(
-                f"{store_dir}/merged_v{v}/folded"
-            ).collect()
-        }
-        if folded <= set(delta_names):
-            folds[v] = folded
     view = spark.read.parquet(f"{base_dir}/postings").select(
         "cell", "vec_id", "v"
     )
     folded_all: set[str] = set()
-    for v in sorted(folds):
-        view = _apply_fold(spark, view, store_dir, v)
-        folded_all |= folds[v]
+    for v, folded in _folds(spark, store_dir).items():
+        if folded <= set(delta_names):
+            view = _apply_fold(spark, view, store_dir, v)
+            folded_all |= folded
     for s in delta_names:
         if s not in folded_all and os.path.exists(f"{root}/{s}/postings"):
             view = view.unionByName(
@@ -647,14 +610,6 @@ def stream_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     vdir = f"{sdir}_vacuumed"
     marker = f"{vroot}/vacuum_done"
 
-    def merged_versions(r: str) -> list[int]:
-        import glob
-
-        return sorted(
-            int(os.path.basename(os.path.dirname(p)).removeprefix("merged_v"))
-            for p in glob.glob(f"{r}/merged_v*/manifest")
-        )
-
     def head_reader(at: str) -> DataFrame:
         """Untouched base cells + folds in version order + pending —
         the shared fold-application algebra, parameterized by store
@@ -686,14 +641,7 @@ def stream_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{vroot}/digest_pre",
             {"n": n_pre, "dig": d_pre, "cols": list(dig_cols)},
         )
-        folded: set[str] = set()
-        for v in merged_versions(vroot):
-            folded |= {
-                r["segment"]
-                for r in spark.read.parquet(
-                    f"{vdir}/merged_v{v}/folded"
-                ).collect()
-            }
+        folded = set().union(*_folds(spark, vdir).values())
         for s in sorted(folded, key=_seg_order):
             shutil.rmtree(f"{vroot}/{s}", ignore_errors=True)
         # completion marker LAST
@@ -704,12 +652,7 @@ def stream_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted = read_json(marker)["deleted"]
     pre = read_json(f"{vroot}/digest_pre")
     n_post, d_post = dig(head_reader(vdir))
-    folded_now: set[str] = set()
-    for v in merged_versions(vroot):
-        folded_now |= {
-            r["segment"]
-            for r in spark.read.parquet(f"{vdir}/merged_v{v}/folded").collect()
-        }
+    folded_now = set().union(*_folds(spark, vdir).values())
     all_deltas = {f"delta_b{k}" for k in range(N_STREAM_BATCHES)}
     remaining = {s for s in all_deltas if os.path.exists(f"{vroot}/{s}")}
     only_folded = (
@@ -832,15 +775,13 @@ def stream_asof_b1_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming twin of ``segment_store.sim_asof_v2_brute_topk``:
     exact cosine top-k against the as-of-batch-1 snapshot (base + the
     first two delivery micro-batches, the fold applied), through the
-    shared brute tail (``segment_store.brute_topk_over_live``), so the
+    shared brute tail (``similarity.brute_topk_over_live``), so the
     historical answer is hash-green against DuckDB's brute force over
     the same membership predicate (``vec_id % DELIVERY_MOD ==
     DELIVERY_MOD-1`` deliveries batched by ``vec_id %
     N_STREAM_BATCHES``). Reproducible-training-snapshot story, streamed
     edition: any committed batch state's exact search regenerates
     bit-for-bit."""
-    from ..operators.segment_store import brute_topk_over_live
-
     live = read_streamed_index_asof(spark, sf_dir, 1).select("vec_id", "v")
     return brute_topk_over_live(live)
 
@@ -885,17 +826,7 @@ def _ensure_delete_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         "cell", "vec_id", "v"
     )
 
-    def merged_versions() -> list[int]:
-        import glob
-        import os
-
-        root = ddir.removeprefix("file:")
-        return sorted(
-            int(os.path.basename(os.path.dirname(p)).removeprefix("merged_v"))
-            for p in glob.glob(f"{root}/merged_v*/manifest")
-        )
-
-    def pending_segments() -> list[str]:
+    def pending_segments(folds: dict[int, set[str]]) -> list[str]:
         import glob
         import os
 
@@ -907,15 +838,12 @@ def _ensure_delete_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             ),
             key=_seg_order,
         )
-        folded: set[str] = set()
-        for v in merged_versions():  # manifest-committed folds only
-            for r in spark.read.parquet(f"{ddir}/merged_v{v}/folded").collect():
-                folded.add(r["segment"])
+        folded = set().union(*folds.values())
         return [s for s in committed if s not in folded]
 
-    def current_view() -> DataFrame:
+    def current_view(folds: dict[int, set[str]]) -> DataFrame:
         view = base_postings
-        for v in merged_versions():
+        for v in folds:
             view = _apply_fold(spark, view, ddir, v)
         return view
 
@@ -930,15 +858,16 @@ def _ensure_delete_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             "overwrite"
         ).parquet(f"{ddir}/{seg}/meta")  # meta LAST commits the segment
 
-        pending = pending_segments()
+        folds = _folds(spark, ddir)
+        pending = pending_segments(folds)
         if len(pending) < MERGE_TRIGGER_SEGMENTS:
             return
-        ver = (merged_versions() or [1])[-1] + 1
+        ver = max(folds, default=1) + 1
         tomb_all = None
         for s in pending:
             ids = spark.read.parquet(f"{ddir}/{s}/ids")
             tomb_all = ids if tomb_all is None else tomb_all.unionByName(ids)
-        view = current_view()
+        view = current_view(folds)
         touched = [
             int(r["cell"])
             for r in view.join(F.broadcast(tomb_all), "vec_id", "left_semi")
@@ -974,10 +903,9 @@ def _ensure_delete_stream(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    rows = [(s, "pending") for s in pending_segments()]
-    for v in merged_versions():
-        for r in spark.read.parquet(f"{ddir}/merged_v{v}/folded").collect():
-            rows.append((r["segment"], f"merged_v{v}"))
+    folds = _folds(spark, ddir)
+    rows = [(s, "pending") for s in pending_segments(folds)]
+    rows += [(s, f"merged_v{v}") for v, segs in folds.items() for s in segs]
     spark.createDataFrame(
         sorted(rows, key=lambda r: _seg_order(r[0])),
         "segment string, status string",

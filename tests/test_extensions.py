@@ -232,6 +232,44 @@ def test_pq_packed_codes_roundtrip_and_jvm_adc(spark):
         assert abs(got[i] - want) < 1e-12
 
 
+def test_nearest_matches_broadcast_argmin_and_pq_codes_roundtrip():
+    """The quantizers' one argmin (numpy only, no Spark): ``_nearest``'s
+    matmul identity picks the same centroid as the broadcast-subtract
+    distance, and ``_pq_codes`` fed trained codebooks gives per-subspace
+    nearest codewords that survive the 10-byte pack/unpack round
+    trip."""
+    import numpy as np
+
+    from customer_revenue_analysis_sql_tableau_spark.operators.similarity import (
+        PQ_K,
+        PQ_M,
+        _nearest,
+        _pack_codes_np,
+        _pq_codes,
+        _train_centroids,
+        _train_pq_codebooks,
+        _unpack_codes_np,
+    )
+
+    x = np.random.default_rng(5).standard_normal((4096, 64))
+    c = _train_centroids(x, 64)
+    want = ((x[:, None] - c[None]) ** 2).sum(-1).argmin(1)
+    assert (_nearest(x, c) == want).all()
+
+    books = _train_pq_codebooks(x)
+    codes = _pq_codes(x, books)
+    assert codes.shape == (4096, PQ_M)
+    sub = books.shape[2]
+    for m in range(PQ_M):
+        sl = x[:, m * sub : (m + 1) * sub]
+        want = ((sl[:, None] - books[m][None]) ** 2).sum(-1).argmin(1)
+        assert (codes[:, m] == want).all()
+    assert codes.min() >= 0 and codes.max() < PQ_K
+    packed = _pack_codes_np(codes)
+    for i in range(len(codes)):
+        assert (_unpack_codes_np(packed[i].tobytes()) == codes[i]).all()
+
+
 def test_pq_topk_recall_vs_bruteforce(spark, sf_dir):
     from customer_revenue_analysis_sql_tableau_spark.operators.similarity import (
         TOP_K,

@@ -374,3 +374,34 @@ def test_streams_start_only_through_session_drain():
         for p in pkg.rglob("*.py")
     )
     assert inferred <= 1
+
+
+def test_ann_tiers_share_one_quantizer():
+    """The ANN tiers draw their training sample, assign nearest
+    centroids, write and read centroids and rank the top k through one
+    helper each in ``operators/similarity.py``: a second copy of the
+    argmin or the tie order is how a persisted tier stops answering
+    bit-for-bit like its in-process twin. The tokens are Python/Spark
+    API spellings, so the DuckDB oracle SQL never matches them."""
+    pkg = Path(__file__).resolve().parents[1] / "customer_revenue_analysis_sql_tableau_spark"
+    once = (
+        ".limit(IVF_TRAIN_SAMPLE)",
+        '"cell int, cv array<double>"',
+        "argmin(axis=1)",
+        'F.desc("cosine"), F.asc("neighbor_id")',
+        'orderBy("cell").collect()',
+    )
+    hits = {
+        tok: [
+            f"{p.relative_to(pkg)}:{i}"
+            for p in sorted(pkg.rglob("*.py"))
+            for i, line in enumerate(p.read_text().splitlines(), 1)
+            if tok in line
+        ]
+        for tok in once
+    }
+    copies = {tok: where for tok, where in hits.items() if len(where) != 1}
+    assert not copies, f"ANN helper written out more than once: {copies}"
+    for rel in ("operators/similarity.py", "streaming/index_maintenance.py"):
+        n = (pkg / rel).read_text().count('cast("array<double>").alias("v")')
+        assert n <= 1, f"{rel}: {n} copies of the embeddings load"

@@ -398,7 +398,7 @@ def test_stream_asof_brute_equals_flat_brute(spark, sf_dir):
     over the flat base + delta_b0 + delta_b1 stack bit-for-bit — the
     fold is invisible to the historical QUERY surface, not just the
     membership audit."""
-    from customer_revenue_analysis_sql_tableau_spark.operators.segment_store import (
+    from customer_revenue_analysis_sql_tableau_spark.operators.similarity import (
         brute_topk_over_live,
     )
 

@@ -6,11 +6,16 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
+
 from customer_revenue_analysis_sql_tableau_spark import app_layer
 
 REFERENCE_SQL = Path("/root/reference/queries_shan.sql")
 
 
+@pytest.mark.skipif(
+    not REFERENCE_SQL.exists(), reason=f"reference SQL {REFERENCE_SQL} not present"
+)
 def test_parse_sql_blocks_on_reference_file():
     """S7: the parser must find all 11 annotated queries in the
     reference's own SQL file (`data-mgmt-streamlit.py:24-43` behavior)."""

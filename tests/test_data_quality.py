@@ -5,10 +5,17 @@ InnoDB's enforcement, run as aggregations (one pass per table)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from customer_revenue_analysis_sql_tableau_spark.operators import sakila
+
+pytestmark = pytest.mark.skipif(
+    not Path(sakila.REFERENCE_DUMP).exists(),
+    reason=f"reference dump {sakila.REFERENCE_DUMP} not present",
+)
 
 #: table → declared primary key (sql/sakila-schema.sql §1.3).
 PRIMARY_KEYS = {

@@ -8,10 +8,12 @@ from pathlib import Path
 
 import pytest
 
-DUMP = "/root/reference/sql/sakila-data.sql"
+from customer_revenue_analysis_sql_tableau_spark.operators.sakila import (
+    REFERENCE_DUMP as DUMP,
+)
 
 pytestmark = pytest.mark.skipif(
-    not Path(DUMP).exists(), reason="reference dump not present"
+    not Path(DUMP).exists(), reason=f"reference dump {DUMP} not present"
 )
 
 

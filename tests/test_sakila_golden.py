@@ -28,6 +28,16 @@ from customer_revenue_analysis_sql_tableau_spark.operators import sakila
 
 GOLDEN_DIR = Path("/root/reference/data")
 
+pytestmark = [
+    pytest.mark.skipif(
+        not Path(sakila.REFERENCE_DUMP).exists(),
+        reason=f"reference dump {sakila.REFERENCE_DUMP} not present",
+    ),
+    pytest.mark.skipif(
+        not GOLDEN_DIR.exists(), reason=f"reference goldens {GOLDEN_DIR} not present"
+    ),
+]
+
 # Columns whose golden formatting is fixed-2-decimal money.
 _MONEY = {
     "Total_Revenue",

@@ -20,6 +20,11 @@ from oracle_check import compare_frames  # noqa: E402
 
 from customer_revenue_analysis_sql_tableau_spark.operators import sakila, sakila_views
 
+pytestmark = pytest.mark.skipif(
+    not Path(sakila.REFERENCE_DUMP).exists(),
+    reason=f"reference dump {sakila.REFERENCE_DUMP} not present",
+)
+
 _NAME = "first_name || ' ' || last_name"
 _NICER = (
     "upper(substr(first_name,1,1)) || lower(substr(first_name,2)) || ' ' || "

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 import tempfile
+from pathlib import Path
 
 import pytest
 
@@ -155,6 +156,10 @@ def test_bucketed_layout_one_file_per_bucket(spark, sf_dir):
             spark.sql("DROP DATABASE IF EXISTS bfb CASCADE")
 
 
+@pytest.mark.skipif(
+    not Path(sakila.REFERENCE_DUMP).exists(),
+    reason=f"reference dump {sakila.REFERENCE_DUMP} not present",
+)
 def test_golden_output_materialization(spark):
     tables = sakila.load_reference_tables(spark)
     view = sakila.customer_revenue_summary(spark, tables)

@@ -15,6 +15,11 @@ from oracle_check import compare_frames  # noqa: E402
 from customer_revenue_analysis_sql_tableau_spark import sql_workload
 from customer_revenue_analysis_sql_tableau_spark.operators import sakila
 
+pytestmark = pytest.mark.skipif(
+    not Path(sakila.REFERENCE_DUMP).exists(),
+    reason=f"reference dump {sakila.REFERENCE_DUMP} not present",
+)
+
 
 @pytest.fixture(scope="module")
 def sql_env(spark):

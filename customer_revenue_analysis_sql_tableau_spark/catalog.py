@@ -50,6 +50,15 @@ BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "par
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
+def _table_files(sf_dir: str, table: str | None) -> tuple[str, list[str]]:
+    """Root of ``sf_dir`` (or of one ``table`` in it) and every file
+    under it: one parquet file, or a directory of part files."""
+    root = os.path.join(sf_dir, f"{table}.parquet") if table else sf_dir
+    if os.path.isfile(root):
+        return root, [root]
+    return root, [os.path.join(r, f) for r, _dirs, fs in os.walk(root) for f in fs]
+
+
 def source_fingerprint(sf_dir: str, table: str | None = None) -> str:
     """8-hex content fingerprint of ``sf_dir`` (or of one ``table`` in
     it): relative path, size and mtime-ns of every file under it, so an
@@ -57,11 +66,7 @@ def source_fingerprint(sf_dir: str, table: str | None = None) -> str:
     100 TB this is a metadata listing, the signal a table format's
     snapshot id provides. Persisted artifacts fold it into their
     directory names so changed inputs never serve a stale build."""
-    root = os.path.join(sf_dir, f"{table}.parquet") if table else sf_dir
-    if os.path.isfile(root):
-        paths = [root]
-    else:
-        paths = [os.path.join(r, f) for r, _dirs, fs in os.walk(root) for f in fs]
+    root, paths = _table_files(sf_dir, table)
     parts: list[str] = []
     for p in paths:
         try:
@@ -72,6 +77,20 @@ def source_fingerprint(sf_dir: str, table: str | None = None) -> str:
     return hashlib.md5(
         (sf_dir.rstrip("/") + "\0" + "\n".join(sorted(parts))).encode()
     ).hexdigest()[:8]
+
+
+def footer_rows(sf_dir: str, table: str) -> int:
+    """Row count of ``table`` summed from its parquet footers — a driver
+    metadata read (KBs per file), no Spark job. Hidden files (``_SUCCESS``,
+    ``.crc``) are skipped, as Spark's own listing skips them."""
+    import pyarrow.parquet as pq
+
+    _root, paths = _table_files(sf_dir, table)
+    return sum(
+        pq.read_metadata(p).num_rows
+        for p in paths
+        if not os.path.basename(p).startswith(("_", "."))
+    )
 
 
 def ensure_utc_session(spark: SparkSession) -> None:

@@ -51,11 +51,6 @@ def money(col: Column | str) -> Column:
     return c.cast(MONEY_DECIMAL)
 
 
-def money_sql(expr: str) -> str:
-    """DuckDB twin of :func:`money`."""
-    return f"CAST({expr} AS DECIMAL(18,2))"
-
-
 def sum_money_as_double(col: Column, ndigits: int = 2) -> Column:
     """``ROUND(SUM(money), 2)`` as an exact double.
 

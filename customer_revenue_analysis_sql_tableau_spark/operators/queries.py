@@ -24,8 +24,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import ensure_utc_session, load_tables
+from ..catalog import ensure_utc_session, footer_rows, load_tables
 from ..functions.money import money, round2_div, round2_div_sql
+from ..session import partition_count
 from .warehouse import (
     CBO_REVENUE_SQL,
     VIEW_ORACLE_SQL,
@@ -53,9 +54,24 @@ _VIEW_CTE = f"WITH cvs AS ({VIEW_ORACLE_SQL})"
 # (data/dw.csv) and every downstream consumer (q1-q11, Streamlit,
 # Tableau) reads the materialization. Our twin: build + cache the view
 # DataFrame once per (session, sf_dir); q1-q11 regroup the cached rows.
-# The cached view is post-aggregation (one row per customer — ~600 rows
-# per sf0.001, 13 columns), so executor memory stays bounded at any
-# scale factor that fits a customer dimension.
+# The cached view is post-aggregation (one row per customer, 13
+# columns), so executor memory stays bounded at any scale factor that
+# fits a customer dimension.
+#
+# Sizing: the view's plan ends in a hash Exchange of
+# spark.sql.shuffle.partitions partitions, and AQE never coalesces a
+# cached plan's output partitioning. So on a miss the fill takes
+# partition_count over the customer table's footer row count (an upper
+# bound on view rows) and, below the cap, caches coalesce(n). Up to
+# VIEW_ROWS_PER_PARTITION customers that is one SinglePartition, which
+# satisfies every grouping and ordering distribution: every read plans
+# no Exchange and runs one job of one task. At the cap the cached plan
+# is left exactly as built.
+#
+# ~62 B per cached row (937 064 B for 14 999 rows at sf0.1), so a
+# million rows keep one partition near Spark's 64 MB advisory size.
+VIEW_ROWS_PER_PARTITION = 1_000_000
+
 _VIEW_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
@@ -83,7 +99,13 @@ def materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 old.unpersist()
             except Exception:
                 pass  # context already stopped
-        df = customer_value_summary(spark, sf_dir).cache()
+        view = customer_value_summary(spark, sf_dir)
+        n = partition_count(
+            spark, footer_rows(sf_dir, "customer"), VIEW_ROWS_PER_PARTITION
+        )
+        if n < int(spark.conf.get("spark.sql.shuffle.partitions")):
+            view = view.coalesce(n)
+        df = view.cache()
         _VIEW_CACHE[key] = df
     return df
 

@@ -497,13 +497,6 @@ def finalize_summary(
     return out
 
 
-def register_view(spark: SparkSession, sf_dir: str, name: str = "customer_value_summary") -> DataFrame:
-    """V1 twin: CREATE OR REPLACE TEMP VIEW (``queries_shan.sql:5-7``)."""
-    df = customer_value_summary(spark, sf_dir)
-    df.createOrReplaceTempView(name)
-    return df
-
-
 # --------------------------------------------------------------------------
 # DuckDB oracle twin (ANSI SQL). Kept adjacent to the builder so the two
 # definitions evolve together; q1-q11 oracles reuse it as a CTE.

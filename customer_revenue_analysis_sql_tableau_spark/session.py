@@ -173,6 +173,14 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
             _OWNED.difference_update(confs)
 
 
+def partition_count(spark: SparkSession, size: int, per_partition: int) -> int:
+    """Partitions for ``size`` units at ``per_partition`` units each:
+    ``ceil(size / per_partition)``, at least one and at most
+    ``spark.sql.shuffle.partitions`` (the conf a cluster sizes)."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-size // per_partition)))
+
+
 def checkpoint_layout(
     spark: SparkSession, df: DataFrame, rows_per_partition: int, *keys: str
 ) -> DataFrame:
@@ -194,8 +202,7 @@ def checkpoint_layout(
       ``UnknownPartitioning(n)`` gives the planner nothing.
     """
     raw = df.localCheckpoint()
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(1, min(cap, -(-raw.count() // rows_per_partition)))
+    n = partition_count(spark, raw.count(), rows_per_partition)
     if keys:
         relaid = raw.repartition(n, *keys)
     elif n == 1:

@@ -46,7 +46,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, source_fingerprint
 from ..lake_core import atomic_write_json, content_digest, read_json
 from ..operators.similarity import (
     DELIVERY_MOD,
@@ -626,12 +626,15 @@ def stream_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # corrupted vector values must flip the digest
         return content_digest(df, dig_cols)
 
-    # a clone whose pre-digest predates the column set (or lacks the
-    # tag) is stale — re-stage rather than compare incompatible digests
-    if os.path.exists(marker) and read_json(f"{vroot}/digest_pre").get(
-        "cols"
-    ) != list(dig_cols):
-        shutil.rmtree(vroot)
+    # a clone is stale when its pre-digest predates the column set (or
+    # lacks the tag), or when it was staged from an earlier build of the
+    # shared store (whose fingerprint it records) — re-stage rather than
+    # compare incompatible digests or report on a store that is gone
+    src = source_fingerprint(root)
+    if os.path.exists(marker):
+        staged = read_json(f"{vroot}/digest_pre")
+        if staged.get("cols") != list(dig_cols) or staged.get("src") != src:
+            shutil.rmtree(vroot)
     if not os.path.exists(marker):
         if os.path.exists(vroot):
             shutil.rmtree(vroot)  # torn clone: re-stage deterministically
@@ -639,7 +642,7 @@ def stream_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_pre, d_pre = dig(head_reader(vdir))
         atomic_write_json(
             f"{vroot}/digest_pre",
-            {"n": n_pre, "dig": d_pre, "cols": list(dig_cols)},
+            {"n": n_pre, "dig": d_pre, "cols": list(dig_cols), "src": src},
         )
         folded = set().union(*_folds(spark, vdir).values())
         for s in sorted(folded, key=_seg_order):

@@ -45,6 +45,7 @@ from customer_revenue_analysis_sql_tableau_spark.operators.warehouse import (
 )
 from customer_revenue_analysis_sql_tableau_spark.session import (
     checkpoint_layout,
+    partition_count,
     scoped_conf,
 )
 
@@ -399,6 +400,77 @@ def test_bpe_merge_round_is_single_stage_at_toy_vocab(spark, sf_dir):
     )
     assert "Exchange" not in exec_plan, exec_plan
     assert "Scan ExistingRDD" in exec_plan  # still reads the checkpoint
+
+
+def test_partition_count_is_ceil_clamped_to_the_shuffle_conf(spark):
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert partition_count(spark, 0, 1000) == 1
+    assert partition_count(spark, 3000, 1000) == 3
+    assert partition_count(spark, 3001, 1000) == 4
+    assert partition_count(spark, cap * 1000, 1000) == cap
+    assert partition_count(spark, cap * 1000 + 1, 1000) == cap
+
+
+def _above_cached_view(df) -> str:
+    """Executed plan of a read of the cached view, without the cached
+    plan itself (printed below the ``InMemoryRelation`` line)."""
+    return (
+        df._jdf.queryExecution().executedPlan().toString()
+        .split("InMemoryRelation")[0]
+    )
+
+
+def test_view_reads_are_exchange_free_single_job(spark, sf_dir):
+    """The memoized view is sized from the customer footer row count
+    (``queries.VIEW_ROWS_PER_PARTITION``): a toy view caches as one
+    partition, whose SinglePartition layout satisfies every grouping
+    and ordering, so q1-q11 reads plan no Exchange and run one job."""
+    from customer_revenue_analysis_sql_tableau_spark.operators import queries
+
+    queries.evict_view(spark, sf_dir)
+    view = queries.materialized_view(spark, sf_dir)
+    view.count()
+    assert view.rdd.getNumPartitions() == 1
+    for fn in (queries.q2_most_frequent_customers, queries.q4_frequency_segmentation):
+        df = fn(spark, sf_dir)
+        df.collect()
+        above = _above_cached_view(df)
+        assert "InMemoryTableScan" in above, above
+        assert "Exchange" not in above, above
+
+    sc = spark.sparkContext
+    group = "view-read-job-count"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        queries.q4_frequency_segmentation(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) == 1, jobs
+
+
+def test_view_above_the_cap_keeps_its_built_plan(spark, sf_dir, monkeypatch):
+    """Above ``spark.sql.shuffle.partitions × VIEW_ROWS_PER_PARTITION``
+    customers the view is cached exactly as built: as many partitions as
+    the shuffle conf, no Coalesce."""
+    from customer_revenue_analysis_sql_tableau_spark.operators import queries
+
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    monkeypatch.setattr(
+        queries,
+        "footer_rows",
+        lambda _sf, _table: cap * queries.VIEW_ROWS_PER_PARTITION + 1,
+    )
+    queries.evict_view(spark, sf_dir)
+    try:
+        view = queries.materialized_view(spark, sf_dir)
+        view.count()
+        assert view.rdd.getNumPartitions() == cap
+        cached = view._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" in cached
+        assert "Coalesce" not in cached, cached
+    finally:
+        queries.evict_view(spark, sf_dir)
 
 
 def test_q18_single_fact_scan(spark, sf_dir):

@@ -417,6 +417,27 @@ def test_stream_asof_brute_equals_flat_brute(spark, sf_dir):
     assert a == b and len(a) == sim.N_QUERIES * sim.TOP_K
 
 
+def test_stream_vacuum_clone_of_a_rebuilt_store_restages(drained, spark, sf_dir):
+    """A vacuumed clone staged from an earlier build of the shared store
+    (its digest_pre records another source fingerprint and that store's
+    digest) must re-stage from the current store instead of reporting on
+    the old one."""
+    import json
+
+    first = im.stream_index_vacuum(spark, sf_dir).collect()[0]
+    sdir, _d = im._ensure_streamed_index(spark, sf_dir)
+    vroot = f"{sdir.removeprefix('file:')}_vacuumed"
+    with open(f"{vroot}/digest_pre") as fh:
+        doc = json.load(fh)
+    doc["src"] = "0" * 8
+    doc["dig"] = doc["dig"] ^ 1
+    with open(f"{vroot}/digest_pre", "w") as fh:
+        json.dump(doc, fh)
+    replay = im.stream_index_vacuum(spark, sf_dir).collect()[0]
+    assert replay == first
+    assert replay["reader_digest_unchanged"]
+
+
 def test_stream_vacuum_stale_digest_format_restages(drained, spark, sf_dir):
     """A vacuumed clone whose persisted digest_pre predates the digest
     column set (e.g. pre-r13 artifacts without the vector column) must

@@ -1,6 +1,7 @@
 """Capture `.explain("formatted")` output for named registry queries
-into ``plans/r15/<query>_<tag>.txt`` — the optimization round's
-before/after plan evidence (judge-checkable without running Spark).
+into ``plans/$PLANS_ROUND/<query>_<tag>.txt`` (``PLANS_ROUND`` defaults
+to ``r16``) — before/after plan evidence that can be read without
+running Spark.
 
 Usage: python tools/capture_plans.py <tag> <query> [<query> ...]
        python tools/capture_plans.py <tag> --headline   # every bench query
@@ -19,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 import __spark_entry__ as entrymod
+from customer_revenue_analysis_sql_tableau_spark.operators.queries import materialized_view
 from customer_revenue_analysis_sql_tableau_spark.session import get_spark
 
 OUT_DIR = os.path.join(
@@ -47,6 +49,10 @@ def main() -> None:
     if names == ["--headline"]:
         names = [n for n in bench.HEADLINE if n in queries]
     spark = get_spark("capture-plans")
+    # Fill the memoized view first, as every workload does before its
+    # reads: a cached plan reports its output partitioning only once it
+    # is materialized, so q1-q11 plan differently against an empty cache.
+    materialized_view(spark, sf_dir).count()
     os.makedirs(OUT_DIR, exist_ok=True)
     for name in names:
         fn = queries[name]
